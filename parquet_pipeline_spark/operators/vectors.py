@@ -27,9 +27,10 @@ expression (functions.cosine_similarity), so:
 Scale path: brute-force cosine is a full scan (fine: it's one
 parquet scan, embarrassingly parallel, no shuffle until the final
 top-k which is O(k) per partition). For sub-scan latency at 100 TB,
-``ann_lsh_neighbors`` gives random-hyperplane LSH bucketing so
-candidate generation touches only matching buckets; recall is
-checked against brute force in tests/test_vectors.py.
+``lsh_bucket_topk`` / ``ann_knn_join`` give random-hyperplane LSH
+bucketing so candidate generation touches only matching buckets,
+and the IVF / PQ / SQ8 index tiers below prune or compress the scan;
+recall is checked against brute force in tests/test_vectors.py.
 """
 
 from __future__ import annotations
@@ -49,11 +50,35 @@ from parquet_pipeline_spark.registry import register
 logger = logging.getLogger(__name__)
 
 
-def _drop_zero_queries(query_rows: list, op: str) -> list:
-    """Filter zero-norm query vectors (cosine is undefined for them)
-    and WARN with the dropped ids (VERDICT r14 nit: a caller probing
-    only zero vectors used to get a silently empty frame). One log
-    line per probe call, ids capped at 20 — bounded driver work."""
+# ---------------------------------------------------------------------------
+# The batched retrieval core. Every numpy-kernel k-NN join below
+# (exact_knn_join, ivf_knn_join, pq_knn_join, ivf_pq_knn_join,
+# sq8_knn_join) is candidates × scorer × optional refine:
+#
+# - candidates: a full scan, or a pruned IVF index scan whose rows a
+#   query only scores when their cell is in ITS probe set (the a09
+#   rule: a query's result never depends on its batch-mates);
+# - scorer: one function from an Arrow batch to a (queries × rows)
+#   score matrix — exact cosine, PQ-ADC or SQ8;
+# - a per-batch partial top-k cut, then one per-query window, so the
+#   shuffle carries candidates only;
+# - refine: exact cosine over each query's own shortlist (PQ paths)
+#   or over the shortlist union (SQ8, via exact_knn_join).
+#
+# Executor-side code (the cut, the scorers, the code decoder) is built
+# as closures: Spark pickles closures by value, but a module-level
+# function by reference, which makes every Python worker import this
+# package — and that fails when the driver found the package through
+# its own sys.path only.
+# ---------------------------------------------------------------------------
+def _prep_queries(query_rows: list, op: str):
+    """The one query prep: drop zero-norm query vectors (cosine is
+    undefined for them) with a WARNING naming the dropped ids (VERDICT
+    r14 nit: a caller probing only zero vectors used to get a silently
+    empty frame; one log line per call, ids capped at 20), then
+    L2-normalize the rest. Returns (kept rows, q_ids, unit queries)."""
+    import numpy as np
+
     kept = [q for q in query_rows if any(float(x) != 0.0 for x in q[1])]
     if len(kept) < len(query_rows):
         dropped = [
@@ -68,7 +93,291 @@ def _drop_zero_queries(query_rows: list, op: str) -> list:
             dropped[:20],
             "…" if len(dropped) > 20 else "",
         )
-    return kept
+    q_ids = np.array([q[0] for q in kept], dtype=np.int64)
+    qm = np.array([list(q[1]) for q in kept], dtype=np.float64)
+    if len(kept):
+        qn = np.sqrt((qm * qm).sum(axis=1))
+        qn[qn == 0.0] = 1.0
+        qm = qm / qn[:, None]
+    return kept, q_ids, qm
+
+
+def _knn_empty(spark: SparkSession, id_col: str) -> DataFrame:
+    return spark.createDataFrame([], f"q_id long, {id_col} long, score double")
+
+
+# Executor-state shipping threshold for the batched probes: above this,
+# the per-query state (unit queries, LUTs, probe sets) goes out as a
+# Spark broadcast (once per executor); below it, closure capture is
+# cheaper than the torrent setup (a 20-query LUT is ~330 KB).
+# Module-level so tests can force the broadcast path at small nq.
+_BROADCAST_STATE_BYTES = 4 * 1024 * 1024
+
+
+def _ship(spark: SparkSession, state: dict):
+    """A getter for per-query state on the executors (VERDICT r12 item
+    4): closure capture serializes the state into EVERY task's pickled
+    function (~16 MB of LUTs at nq=1000, re-deserialized per task); a
+    broadcast moves it once per executor. The handle lives inside the
+    returned plan's closures, so the ContextCleaner reclaims it when
+    the consumer drops the DataFrame — an explicit destroy() here
+    would race the lazy execution."""
+    nbytes = sum(
+        a.nbytes
+        for v in state.values()
+        if v is not None
+        for a in (v if isinstance(v, list) else [v])
+    )
+    if nbytes > _BROADCAST_STATE_BYTES:
+        bc = spark.sparkContext.broadcast(state)
+        return lambda: bc.value
+    return lambda: state
+
+
+def _ivf_probes(centroids, query_rows: list, nprobe: int, extra_cells=None):
+    """Per-query IVF candidates: each query's nprobe nearest cells,
+    plus ``extra_cells`` for every query. Returns (sorted union of
+    probed cells — the scan's partition filter, per-query cell arrays
+    — the kernel's masks)."""
+    import numpy as np
+
+    steer = {int(c) for c in extra_cells} if extra_cells else set()
+    probe_sets = [
+        set(_probe_cells(centroids, list(q[1]), nprobe)) | steer
+        for q in query_rows
+    ]
+    all_cells = sorted(set().union(*probe_sets))
+    return all_cells, [np.fromiter(s, dtype=np.int64) for s in probe_sets]
+
+
+def _per_query_top(df: DataFrame, limit: int, id_col: str) -> DataFrame:
+    """Rows ranked ≤ ``limit`` within each q_id by (score desc, id asc)."""
+    w = W.partitionBy("q_id").orderBy(F.col("score").desc(), id_col)
+    return df.withColumn("rn", F.row_number().over(w)).filter(F.col("rn") <= limit)
+
+
+def _knn_out(df: DataFrame, k: int, id_col: str) -> DataFrame:
+    """The final per-query top-k, scores rounded to 6dp."""
+    return _per_query_top(df, k, id_col).select(
+        "q_id", id_col, F.round("score", 6).alias("score")
+    )
+
+
+def _topk_scan(
+    scan: DataFrame, get_state, scorer, limit: int, id_col: str, collapse: bool = False
+) -> DataFrame:
+    """candidates × scorer → per-query top-``limit`` (q_id, id, score,
+    rn). ``scorer(pdf, st)`` returns (row keep mask, (queries × kept
+    rows) scores); rows it drops are not candidates. With ``collapse``
+    duplicate ids count once (in-batch in the cut, across batches by
+    a deterministic groupBy-max — never dropDuplicates, whose
+    arbitrary-row keep would make ties nondeterministic, ADVICE r13)."""
+
+    def cut(sims, ids, cells, st):
+        """The one per-batch top-k cut. ``sims`` is the scorer's (queries ×
+        rows) matrix; the cut only ranks it. Per query: mask rows outside
+        its probe set to -inf (IVF candidates only), optionally collapse
+        replayed copies of an id to their max, then keep the batch's
+        ``limit`` best by the final window's own (score desc, id asc)
+        order — a threshold at the k-th score, then a lexsort of the small
+        candidate set. A plain argpartition would keep an arbitrary subset
+        of rows tied at the k-th score and could drop a tied smaller id
+        before the window sees it.
+
+        Masked rows never survive the cut: when a query has fewer than
+        ``limit`` in-probe rows in the batch the threshold is -inf and
+        ``>=`` alone would admit rows from cells it never probed (ADVICE
+        r12 high). The collapse (ADVICE r14 medium) matters because
+        ``limit`` counts rows: without it each replayed copy of a
+        high-ranking id eats its own slot and can evict a distinct id.
+        Copies in separate batches are collapsed by the caller's
+        groupBy-max."""
+        import numpy as np
+        import pandas as pd
+
+        q_ids, probes = st["q_ids"], st.get("probes")
+        dup = False
+        if collapse:
+            uniq, inv = np.unique(ids, return_inverse=True)
+            dup = len(uniq) < len(ids)
+        kk = min(limit, len(uniq) if dup else len(ids))
+        qi_out, id_out, sc_out = [], [], []
+        for j in range(len(q_ids)):
+            col, row_ids = sims[j], ids
+            if probes is not None:
+                col = np.where(np.isin(cells, probes[j]), col, -np.inf)
+            if dup:
+                colu = np.full(len(uniq), -np.inf)
+                np.maximum.at(colu, inv, col)
+                col, row_ids = colu, uniq
+            cand = np.arange(len(col))
+            if len(col) > kk:
+                cand = np.nonzero(col >= np.partition(col, -kk)[-kk])[0]
+            cand = cand[col[cand] > -np.inf]
+            order = cand[np.lexsort((row_ids[cand], -col[cand]))][:kk]
+            qi_out.append(np.full(len(order), q_ids[j], dtype=np.int64))
+            id_out.append(row_ids[order])
+            sc_out.append(col[order])
+        return pd.DataFrame(
+            {
+                "q_id": np.concatenate(qi_out),
+                id_col: np.concatenate(id_out),
+                "score": np.concatenate(sc_out),
+            }
+        )
+
+    def partial(batches):
+        st = get_state()
+        for pdf in batches:
+            if not len(pdf):  # empty Arrow batch: the 2-D reshapes of
+                continue      # the scorers would AxisError (r13)
+            keep, sims = scorer(pdf, st)
+            ids = pdf[id_col].to_numpy()[keep]
+            if not len(ids):
+                continue
+            masked = st.get("probes") is not None
+            cells = pdf["cell"].to_numpy()[keep] if masked else None
+            yield cut(sims, ids, cells, st)
+
+    cand = scan.mapInPandas(partial, f"q_id long, {id_col} long, score double")
+    if collapse:
+        cand = cand.groupBy("q_id", id_col).agg(F.max("score").alias("score"))
+    return _per_query_top(cand, limit, id_col)
+
+
+def _dense(df: DataFrame, vec_col: str, dim: int) -> DataFrame:
+    """Keep the numpy kernels' input dense: a NULL embedding would turn
+    the Arrow batch into an object array, and a wrong-DIMENSION row
+    (r12, hostile-index battery) would make it ragged and abort the
+    matmul — the expression path scores both NULL, so "not a
+    candidate" is the uniform contract. JVM-side, pushed to the scan."""
+    return df.filter(F.col(vec_col).isNotNull() & (F.size(vec_col) == dim))
+
+
+def _exact_scorer(vec_col: str):
+    """Exact cosine of every nonzero row against every unit query
+    (zero-norm rows are not retrievable)."""
+
+    def score(pdf, st):
+        import numpy as np
+
+        m = np.array(pdf[vec_col].tolist(), dtype=np.float64)
+        norms = np.sqrt((m * m).sum(axis=1))
+        keep = norms > 0.0
+        return keep, ((m[keep] / norms[keep][:, None]) @ st["qm"].T).T
+
+    return score
+
+
+def _exact_topk(scan, q_ids, qm, k, id_col, vec_col, probes=None) -> DataFrame:
+    """Exact cosine top-k of every query over the scan's candidates.
+    No rounding before the cut: the oracles order by the raw cosine."""
+    get_state = _ship(scan.sparkSession, {"q_ids": q_ids, "qm": qm, "probes": probes})
+    cols = [id_col, vec_col] + (["cell"] if probes is not None else [])
+    scan = _dense(scan, vec_col, qm.shape[1]).select(*cols)
+    return _knn_out(
+        _topk_scan(scan, get_state, _exact_scorer(vec_col), k, id_col), k, id_col
+    )
+
+
+def _code_decoder(width: int, n_codes: int):
+    """The one dirty-code decoder, ``pq_topk``'s F.get contract: a code
+    row that is NULL, holds a NULL, has the wrong width, or carries a
+    code outside [0, n_codes) is invalid — dropped, never retrieved,
+    never aborts. ``decode(raw) -> (int64 codes, valid mask)``."""
+
+    def decode(raw: list):
+        import numpy as np
+
+        codes = np.array(
+            [
+                c
+                if c is not None
+                and len(c) == width
+                and all(x is not None for x in c)
+                else [-1] * width
+                for c in raw
+            ],
+            dtype=np.int64,
+        )
+        return codes, ((codes >= 0) & (codes < n_codes)).all(axis=1)
+
+    return decode
+
+
+def _refine_pairs(emb, short, get_state, k, id_col, vec_col, dim) -> DataFrame:
+    """Exact re-rank, per query: fetch only shortlisted vectors (one
+    broadcast join — the shortlist union is nq×shortlist-bounded),
+    score each (q_id, id) PAIR against that query's own vector, window
+    the final top-k."""
+    import numpy as np
+    import pandas as pd
+
+    def exact_pairs(batches):
+        st = get_state()
+        b_qm = st["qm"]
+        q_index = {int(q): j for j, q in enumerate(st["q_ids"])}
+        for pdf in batches:
+            if not len(pdf):
+                continue
+            ids = pdf[id_col].to_numpy()
+            qs = pdf["q_id"].to_numpy()
+            x = np.array(pdf[vec_col].tolist(), dtype=np.float64)
+            norms = np.sqrt((x * x).sum(axis=1))
+            keep = norms > 0.0
+            ids, qs, x, norms = ids[keep], qs[keep], x[keep], norms[keep]
+            if not len(ids):
+                continue
+            qrows = b_qm[[q_index[int(q)] for q in qs]]
+            scores = (x / norms[:, None] * qrows).sum(axis=1)
+            yield pd.DataFrame({"q_id": qs, id_col: ids, "score": scores})
+
+    pairs = _dense(
+        emb.select(id_col, vec_col).join(F.broadcast(short), id_col), vec_col, dim
+    ).mapInPandas(exact_pairs, f"q_id long, {id_col} long, score double")
+    return _knn_out(pairs, k, id_col)
+
+
+def _adc_knn(
+    codes_scan, codebooks, emb, q_ids, qm, k, shortlist, id_col, vec_col,
+    collapse, probes=None,
+) -> DataFrame:
+    """PQ-ADC shortlist over the scan's code rows → per-query exact
+    refine. Each query's (m, k_codes) lookup table of subvector dot
+    products stays executor-side; a row's approximate cosine is m table
+    lookups + adds, vectorized over the Arrow batch and rounded to 6dp
+    BEFORE the cut exactly like ``pq_topk``'s F.round, so shortlist
+    tie-breaks match the codegen probe."""
+    import numpy as np
+
+    books = [np.asarray(c, dtype=np.float64) for c in codebooks]
+    m, dsub, k_codes = len(books), books[0].shape[1], books[0].shape[0]
+    # (nq, m, k_codes): luts[j, s, c] = <query j, codebook s entry c>
+    luts = np.stack(
+        [
+            np.stack([books[s] @ qm[j, s * dsub : (s + 1) * dsub] for s in range(m)])
+            for j in range(len(q_ids))
+        ]
+    )
+    get_state = _ship(
+        codes_scan.sparkSession,
+        {"q_ids": q_ids, "qm": qm, "luts": luts, "probes": probes},
+    )
+
+    decode = _code_decoder(m, k_codes)
+
+    def adc(pdf, st):
+        codes, valid = decode(pdf["codes"].tolist())
+        codes, b_luts = codes[valid], st["luts"]
+        sims = np.zeros((len(b_luts), len(codes)), dtype=np.float64)
+        for s in range(m):
+            sims += b_luts[:, s, :][:, codes[:, s]]
+        return valid, np.round(sims, 6)
+
+    short = _topk_scan(
+        codes_scan, get_state, adc, shortlist, id_col, collapse
+    ).select("q_id", id_col)
+    return _refine_pairs(emb, short, get_state, k, id_col, vec_col, qm.shape[1])
 
 
 def _emb(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -749,102 +1058,16 @@ def ivf_knn_join(
     deterministic (score desc, id asc) tie-break and
     candidates-only shuffle as v07 — this is the nightly-RAG-refresh
     shape: queries x 100M vectors without a full-corpus scan.
+    Zero-norm queries are dropped with a warning (cosine undefined).
     """
-    import numpy as np
-    import pandas as pd
-
-    # zero-norm queries have undefined similarity to everything:
-    # they contribute no result rows (matches the NULL-score contract
-    # of the expression path)
-    query_rows = [
-        q for q in query_rows if any(float(x) != 0.0 for x in q[1])
-    ]
-    if not query_rows:
-        return spark.createDataFrame([], f"q_id long, {id_col} long, score double")
-    q_ids = np.array([q[0] for q in query_rows], dtype=np.int64)
-    qm = np.array([list(q[1]) for q in query_rows], dtype=np.float64)
-    qn = np.sqrt((qm * qm).sum(axis=1))
-    qn[qn == 0.0] = 1.0
-    qm = qm / qn[:, None]
-    probe_sets = [
-        set(_probe_cells(centroids, list(q[1]), nprobe)) for q in query_rows
-    ]
-    all_cells = sorted(set().union(*probe_sets)) if probe_sets else []
-
-    out_schema = T.StructType(
-        [
-            T.StructField("q_id", T.LongType()),
-            T.StructField(id_col, T.LongType()),
-            T.StructField("score", T.DoubleType()),
-        ]
-    )
-
-    def partial_topk(batches):
-        for pdf in batches:
-            if not len(pdf):  # empty Arrow batch: sum(axis=1) on a
-                continue      # 1-D empty array would AxisError (r13)
-            ids = pdf[id_col].to_numpy()
-            cells = pdf["cell"].to_numpy()
-            m = np.array(pdf[vec_col].tolist(), dtype=np.float64)
-            norms = np.sqrt((m * m).sum(axis=1))
-            keep = norms > 0.0  # zero-norm vectors are not retrievable
-            ids, cells, m, norms = ids[keep], cells[keep], m[keep], norms[keep]
-            if not len(ids):
-                continue
-            sims = (m / norms[:, None]) @ qm.T  # (batch, n_queries)
-            kk = min(k, len(ids))
-            qi_out, id_out, sc_out = [], [], []
-            for j in range(sims.shape[1]):
-                col = np.where(
-                    np.isin(cells, list(probe_sets[j])), sims[:, j], -np.inf
-                )
-                if len(col) > kk:
-                    thresh = np.partition(col, -kk)[-kk]
-                    cand = np.nonzero(col >= thresh)[0]
-                    # a small in-probe pool makes thresh -inf and the
-                    # mask admits dead rows; downstream filters them
-                    # (score > -inf) so this is slot/shuffle hygiene,
-                    # not correctness — unlike the PQ path, where the
-                    # refine made it a wrong-answer bug (r13)
-                    cand = cand[np.isfinite(col[cand])]
-                else:
-                    cand = np.nonzero(col > -np.inf)[0]
-                order = cand[np.lexsort((ids[cand], -col[cand]))][:kk]
-                qi_out.append(np.full(len(order), q_ids[j], dtype=np.int64))
-                id_out.append(ids[order])
-                sc_out.append(col[order])
-            yield pd.DataFrame(
-                {
-                    "q_id": np.concatenate(qi_out) if qi_out else [],
-                    id_col: np.concatenate(id_out) if id_out else [],
-                    "score": np.concatenate(sc_out) if sc_out else [],
-                }
-            )
-
-    index = _read_ivf_index(spark, path)
-    if index is None:  # day-zero index: zero vectors -> zero neighbors
-        return spark.createDataFrame([], f"q_id long, {id_col} long, score double")
+    query_rows, q_ids, qm = _prep_queries(query_rows, "ivf_knn_join")
+    # a DAY-ZERO index holds zero vectors -> zero neighbors
+    index = _read_ivf_index(spark, path) if query_rows else None
+    if index is None:
+        return _knn_empty(spark, id_col)
+    all_cells, probes = _ivf_probes(centroids, query_rows, nprobe)
     scan = index.filter(F.col("cell").isin(all_cells))
-    candidates = (
-        # null-embedding rows (dirty upstream data) would turn the
-        # Arrow batch into a numpy object array and crash the kernel;
-        # wrong-dimension rows (r12, hostile-index battery) would
-        # make the batch ragged and abort the matmul — both are
-        # "not a candidate" cell-level dirt, filtered JVM-side with
-        # pushdown to the scan
-        scan.filter(
-            F.col(vec_col).isNotNull() & (F.size(vec_col) == qm.shape[1])
-        )
-        .select(id_col, vec_col, "cell")
-        .mapInPandas(partial_topk, out_schema)
-    )
-    w = W.partitionBy("q_id").orderBy(F.col("score").desc(), id_col)
-    return (
-        candidates.filter(F.col("score") > float("-inf"))
-        .withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= k)
-        .select("q_id", id_col, F.round("score", 6).alias("score"))
-    )
+    return _exact_topk(scan, q_ids, qm, k, id_col, vec_col, probes)
 
 
 @register(
@@ -1458,96 +1681,13 @@ def exact_knn_join(
 ) -> DataFrame:
     """(q_id, vec_id, score) — the k nearest corpus vectors by
     cosine for every query row. ``query_rows`` is a bounded
-    list of (q_id, vector) pairs."""
-    import numpy as np
-    import pandas as pd
-
+    list of (q_id, vector) pairs; zero-norm queries are dropped with
+    a warning (cosine undefined), an empty batch is a valid empty
+    frame."""
+    query_rows, q_ids, qm = _prep_queries(query_rows, "exact_knn_join")
     if not query_rows:
-        # valid empty batch; an empty (0, d) matmul would throw
-        # shape errors inside the executor
-        return corpus.sparkSession.createDataFrame(
-            [], f"q_id long, {id_col} long, score double"
-        )
-    # same zero-norm query contract as ivf_knn_join
-    query_rows = [q for q in query_rows if any(float(x) != 0.0 for x in q[1])]
-    if not query_rows:
-        return corpus.sparkSession.createDataFrame(
-            [], f"q_id long, {id_col} long, score double"
-        )
-    q_ids = np.array([q[0] for q in query_rows], dtype=np.int64)
-    qm = np.array([list(q[1]) for q in query_rows], dtype=np.float64)
-    qn = np.sqrt((qm * qm).sum(axis=1))
-    qn[qn == 0.0] = 1.0
-    qm = qm / qn[:, None]
-
-    out_schema = T.StructType(
-        [
-            T.StructField("q_id", T.LongType()),
-            T.StructField(id_col, T.LongType()),
-            T.StructField("score", T.DoubleType()),
-        ]
-    )
-
-    def partial_topk(batches):
-        for pdf in batches:
-            if not len(pdf):  # empty Arrow batch (r13 guard)
-                continue
-            ids = pdf[id_col].to_numpy()
-            m = np.array(pdf[vec_col].tolist(), dtype=np.float64)
-            norms = np.sqrt((m * m).sum(axis=1))
-            keep = norms > 0.0  # zero-norm vectors are not retrievable
-            ids, m, norms = ids[keep], m[keep], norms[keep]
-            if not len(ids):
-                continue
-            sims = (m / norms[:, None]) @ qm.T  # (batch, n_queries)
-            kk = min(k, len(ids))
-            # Per query keep the batch's k best with the SAME
-            # deterministic tie-break as the final window (score
-            # desc, id asc): plain argpartition keeps an arbitrary
-            # subset of candidates tied at the k-th score, which can
-            # discard a tied smaller-id row before the global window
-            # sees it. Threshold at the k-th score, then lexsort the
-            # (small) candidate set — exact and still O(batch) per
-            # query for the partition step.
-            qi_out, id_out, sc_out = [], [], []
-            for j in range(sims.shape[1]):
-                col = sims[:, j]
-                if len(col) > kk:
-                    thresh = np.partition(col, -kk)[-kk]
-                    cand = np.nonzero(col >= thresh)[0]
-                else:
-                    cand = np.arange(len(col))
-                order = cand[np.lexsort((ids[cand], -col[cand]))][:kk]
-                qi_out.append(np.full(len(order), q_ids[j], dtype=np.int64))
-                id_out.append(ids[order])
-                sc_out.append(col[order])
-            rows = {
-                "q_id": np.concatenate(qi_out),
-                id_col: np.concatenate(id_out),
-                "score": np.concatenate(sc_out),
-            }
-            yield pd.DataFrame(rows)
-
-    candidates = (
-        # same null-embedding guard as ivf_knn_join: keep the numpy
-        # kernel's input dense. The size() leg (r12, hostile-index
-        # battery) drops wrong-DIMENSION rows — a ragged batch makes
-        # np.array build an object array and the matmul abort the
-        # whole job on one dirty row; the expression path scores the
-        # same row NULL, so "not a candidate" is the uniform contract.
-        # Both filters are JVM-side and push to the scan.
-        corpus.filter(
-            F.col(vec_col).isNotNull() & (F.size(vec_col) == qm.shape[1])
-        )
-        .select(id_col, vec_col)
-        .mapInPandas(partial_topk, out_schema)
-    )
-    w = W.partitionBy("q_id").orderBy(F.col("score").desc(), id_col)
-    return (
-        candidates.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= k)
-        .select("q_id", id_col, F.round("score", 6).alias("score"))
-    )
+        return _knn_empty(corpus.sparkSession, id_col)
+    return _exact_topk(corpus, q_ids, qm, k, id_col, vec_col)
 
 
 @register(
@@ -1720,7 +1860,7 @@ def pq_topk(
     duplicate-free case (a fresh build, or post-compact: the index
     metadata's ``appends == 0`` certifies it) doesn't need; callers
     that hold that certificate pass False and keep the shuffle-free
-    scan→TakeOrdered plan (``ivf_pq_topk`` decides from the sidecar).
+    scan→TakeOrdered plan (``ivf_pq_knn_join`` decides from the sidecar).
     Pinned by the crash-replay tests in tests/test_vectors.py.
 
     Corrupt-code contract (r12, the xlsx cell-dirt taxonomy applied
@@ -1781,33 +1921,19 @@ def pq_topk_refined(
     vec_col: str = "embedding",
     dedup_ids: bool = True,
 ) -> DataFrame:
-    """ADC shortlist → exact re-rank: the production PQ shape. The
-    codegen'd ADC scan picks ``shortlist`` candidates from codes (m
-    bytes/row); only those rows' full vectors are fetched (broadcast
-    semi-join — the shortlist is k-bounded tiny) and re-scored with
-    exact cosine. Measured on the synthetic corpus: direct ADC@20
-    recall is 0.45–0.8 (near-iid vectors are PQ's worst case), the
-    200-shortlist refine reads 0.9–1.0. The shortlist must scale
-    with the corpus for a flat scan (200 is 10% of a 2k slice but 1%
-    of 20k, where one query read 0.45) — at real scale pair this
-    with the IVF cells (ADC within probed cells) instead of growing
-    the shortlist.
-
-    ``dedup_ids`` follows pq_topk's contract (default SAFE): the
-    final result is duplicate-free either way (the refine is a
-    semi-join on distinct ids), but duplicate code rows erode
-    shortlist DEPTH unless dedup'd; pass False only for codes that
-    are unique by construction (a fresh pq_encode — a13/a14 do)."""
-    short = pq_topk(
-        codes_df,
-        codebooks,
-        query_vec,
-        k=shortlist,
-        id_col=id_col,
-        dedup_ids=dedup_ids,
+    """ADC shortlist → exact re-rank for ONE query: ``pq_knn_join``
+    on a batch of one (batch independence makes that the same answer
+    the query gets inside any batch). Measured on the synthetic
+    corpus: direct ADC@20 recall is 0.45–0.8 (near-iid vectors are
+    PQ's worst case), the 200-shortlist refine reads 0.9–1.0. The
+    shortlist must scale with the corpus for a flat scan (200 is 10%
+    of a 2k slice but 1% of 20k, where one query read 0.45) — at real
+    scale pair this with the IVF cells (``ivf_pq_topk``) instead of
+    growing the shortlist. ``dedup_ids`` follows ``pq_knn_join``."""
+    return pq_knn_join(
+        codes_df, codebooks, emb, [(q_id, list(query_vec))], k=k,
+        shortlist=shortlist, id_col=id_col, vec_col=vec_col, dedup_ids=dedup_ids,
     )
-    sub = emb.join(F.broadcast(short.select(id_col)), id_col, "left_semi")
-    return exact_knn_join(sub, [(q_id, list(query_vec))], k=k, id_col=id_col, vec_col=vec_col)
 
 
 def pq_knn_join(
@@ -1821,203 +1947,32 @@ def pq_knn_join(
     vec_col: str = "embedding",
     dedup_ids: bool = True,
 ) -> DataFrame:
-    """Batched full-scan ADC + exact refine: the multi-query twin of
-    ``pq_topk_refined`` and the flat-index sibling of
-    ``ivf_pq_knn_join`` — the whole query batch runs in ONE plan
+    """Batched full-scan ADC + exact refine — ``ivf_pq_knn_join``
+    with every cell probed: the whole query batch runs in ONE plan
     (one codes scan, one Arrow ADC pass over every query's LUT, one
     window for per-query shortlists, one refine join) instead of one
     probe job chain per query. Returns (q_id, id, score), per-query
     top-k, ordered within each q_id by score desc, id asc.
 
-    Per-query independence: there are no cells here — every query
-    scores every valid code row — so batch membership trivially
-    cannot change any query's result; equality with the solo
-    ``pq_topk_refined`` path is pinned per-query in
-    tests/test_vectors.py. The kernel rounds ADC scores to 6dp
-    BEFORE the shortlist cut, exactly like ``pq_topk``'s
-    F.round(score_pq, 6), so even shortlist-boundary tie-breaks
-    match the solo path byte-for-byte.
-
-    LUT shipping follows ivf_pq_knn_join (VERDICT r12 item 4): the
-    (nq, m, k_codes) table rides one Spark broadcast per executor
-    above _BROADCAST_STATE_BYTES, plain closure capture below it.
+    Per-query independence: every query scores every valid code row,
+    so batch membership cannot change any query's result;
+    ``pq_topk_refined`` is this function on a batch of one. The ADC
+    scores are rounded to 6dp BEFORE the shortlist cut, exactly like
+    ``pq_topk``'s F.round(score_pq, 6), so even shortlist-boundary
+    tie-breaks match the codegen probe (pinned per query in
+    tests/test_vectors.py).
 
     Dirty-code contract matches ``pq_topk``'s F.get semantics: NULL,
     truncated, out-of-range, or negative codes are dropped, never
     retrieved, never abort. ``dedup_ids`` follows pq_topk's contract
     (default SAFE; pass False for codes unique by construction —
     a fresh ``pq_encode``, which is what the a13 gate holds)."""
-    import numpy as np
-    import pandas as pd
-
-    spark = codes_df.sparkSession
-    query_rows = _drop_zero_queries(query_rows, "pq_knn_join")
+    query_rows, q_ids, qm = _prep_queries(query_rows, "pq_knn_join")
     if not query_rows:
-        return spark.createDataFrame(
-            [], f"q_id long, {id_col} long, score double"
-        )
-    q_ids = np.array([q[0] for q in query_rows], dtype=np.int64)
-    qm = np.array([list(q[1]) for q in query_rows], dtype=np.float64)
-    qn = np.sqrt((qm * qm).sum(axis=1))
-    qn[qn == 0.0] = 1.0
-    qm = qm / qn[:, None]
-
-    books = [np.asarray(c, dtype=np.float64) for c in codebooks]
-    m, dsub = len(books), books[0].shape[1]
-    k_codes = books[0].shape[0]
-    luts = np.stack(
-        [
-            np.stack(
-                [books[s] @ qm[j, s * dsub : (s + 1) * dsub] for s in range(m)]
-            )
-            for j in range(len(q_ids))
-        ]
-    )
-
-    state = {"q_ids": q_ids, "qm": qm, "luts": luts}
-    state_bytes = luts.nbytes + qm.nbytes
-    if state_bytes > _BROADCAST_STATE_BYTES:
-        bc = spark.sparkContext.broadcast(state)
-        get_state = lambda: bc.value  # noqa: E731
-    else:
-        get_state = lambda: state  # noqa: E731
-
-    adc_schema = T.StructType(
-        [
-            T.StructField("q_id", T.LongType()),
-            T.StructField(id_col, T.LongType()),
-            T.StructField("score_pq", T.DoubleType()),
-        ]
-    )
-    sl = shortlist
-
-    def adc_partial(batches):
-        st = get_state()
-        b_qids, b_luts = st["q_ids"], st["luts"]
-        for pdf in batches:
-            raw = pdf["codes"].tolist()
-            # empty-batch guard (ADVICE r12): np.array([]) is 1-D, so
-            # .all(axis=1) below would raise AxisError
-            if not len(raw):
-                continue
-            ids = pdf[id_col].to_numpy()
-            codes = np.array(
-                [
-                    c
-                    if c is not None
-                    and len(c) == m
-                    and all(x is not None for x in c)
-                    else [-1] * m
-                    for c in raw
-                ],
-                dtype=np.int64,
-            )
-            valid = ((codes >= 0) & (codes < k_codes)).all(axis=1)
-            ids, codes = ids[valid], codes[valid]
-            if not len(ids):
-                continue
-            sims = np.zeros((len(b_qids), len(ids)), dtype=np.float64)
-            for s in range(m):
-                sims += b_luts[:, s, :][:, codes[:, s]]
-            # 6dp round BEFORE the cut — pq_topk parity (see docstring)
-            sims = np.round(sims, 6)
-            if dedup_ids:
-                # ADVICE r14 (medium): kk counts ROWS, so duplicate id
-                # rows that rank high inside a batch would each eat a
-                # per-batch slot and could evict a distinct id the solo
-                # pq_topk path (which dedups BEFORE its global limit)
-                # shortlists. Collapse to per-id max before the cut so
-                # batched ≡ solo even on replay-littered codes; the
-                # downstream groupBy-max still handles CROSS-batch
-                # copies (replayed appends land in separate files).
-                uniq, inv = np.unique(ids, return_inverse=True)
-                if len(uniq) < len(ids):
-                    collapsed = np.full(
-                        (len(b_qids), len(uniq)), -np.inf
-                    )
-                    np.maximum.at(
-                        collapsed,
-                        (np.arange(len(b_qids))[:, None], inv[None, :]),
-                        sims,
-                    )
-                    sims, ids = collapsed, uniq
-            qi_out, id_out, sc_out = [], [], []
-            kk = min(sl, len(ids))
-            for j in range(len(b_qids)):
-                col = sims[j]
-                if len(col) > kk:
-                    thresh = np.partition(col, -kk)[-kk]
-                    cand = np.nonzero(col >= thresh)[0]
-                else:
-                    cand = np.arange(len(col))
-                order = cand[np.lexsort((ids[cand], -col[cand]))][:kk]
-                qi_out.append(np.full(len(order), b_qids[j], dtype=np.int64))
-                id_out.append(ids[order])
-                sc_out.append(col[order])
-            yield pd.DataFrame(
-                {
-                    "q_id": np.concatenate(qi_out) if qi_out else [],
-                    id_col: np.concatenate(id_out) if id_out else [],
-                    "score_pq": np.concatenate(sc_out) if sc_out else [],
-                }
-            )
-
-    w = W.partitionBy("q_id").orderBy(F.col("score_pq").desc(), id_col)
-    short = codes_df.select(id_col, "codes").mapInPandas(
-        adc_partial, adc_schema
-    )
-    if dedup_ids:
-        # same deterministic groupBy-max contract as pq_topk
-        short = short.groupBy("q_id", id_col).agg(
-            F.max("score_pq").alias("score_pq")
-        )
-    short = (
-        short.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= sl)
-        .select("q_id", id_col)
-    )
-
-    # exact refine: fetch only shortlisted vectors (broadcast join —
-    # the shortlist union is nq×shortlist-bounded), score each
-    # (q_id, id) PAIR against its own query, window the final top-k
-    refine_in = emb.select(id_col, vec_col).join(F.broadcast(short), id_col)
-
-    out_schema = T.StructType(
-        [
-            T.StructField("q_id", T.LongType()),
-            T.StructField(id_col, T.LongType()),
-            T.StructField("score", T.DoubleType()),
-        ]
-    )
-
-    def exact_pairs(batches):
-        st = get_state()
-        b_qm = st["qm"]
-        q_index = {int(q): j for j, q in enumerate(st["q_ids"])}
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            ids = pdf[id_col].to_numpy()
-            qs = pdf["q_id"].to_numpy()
-            x = np.array(pdf[vec_col].tolist(), dtype=np.float64)
-            norms = np.sqrt((x * x).sum(axis=1))
-            keep = norms > 0.0
-            ids, qs, x, norms = ids[keep], qs[keep], x[keep], norms[keep]
-            if not len(ids):
-                continue
-            qrows = b_qm[[q_index[int(q)] for q in qs]]
-            scores = (x / norms[:, None] * qrows).sum(axis=1)
-            yield pd.DataFrame({"q_id": qs, id_col: ids, "score": scores})
-
-    wf = W.partitionBy("q_id").orderBy(F.col("score").desc(), id_col)
-    return (
-        refine_in.filter(
-            F.col(vec_col).isNotNull() & (F.size(vec_col) == qm.shape[1])
-        )
-        .mapInPandas(exact_pairs, out_schema)
-        .withColumn("rn", F.row_number().over(wf))
-        .filter(F.col("rn") <= k)
-        .select("q_id", id_col, F.round("score", 6).alias("score"))
+        return _knn_empty(codes_df.sparkSession, id_col)
+    return _adc_knn(
+        codes_df.select(id_col, "codes"), codebooks, emb, q_ids, qm, k,
+        shortlist, id_col, vec_col, dedup_ids,
     )
 
 
@@ -2097,34 +2052,91 @@ def pq_build_cached(
 
 
 # ---------------------------------------------------------------------------
-# a13/a14 — PQ on the official record, the a11 assertion pattern:
-# the oracle replays what is exactly replayable (the exact top-20
-# and the encode-completeness counts) and literal TRUE for the
-# quality floor the Spark side asserts about its own approximation.
-# Corpus is id-bounded (the d03 convention) so the row is
-# oracle-comparable at every sf; full-corpus behavior is measured in
-# BENCH_NOTES §Product quantization.
+# The exact-top-20 gate rows (a13, a15–a19, s03–s05) — the a11
+# assertion pattern: the oracle replays what is exactly replayable
+# (the exact top-20 per query over an id-bounded slice, plus any
+# replayable count) and literal TRUE for the per-query verdict the
+# Spark side asserts about its own approximation. The corpus is
+# id-bounded (the d03 convention) so every row is oracle-comparable
+# at every sf; full-corpus behavior is measured in BENCH_NOTES
+# §Product quantization.
 # ---------------------------------------------------------------------------
-def _register_pq():
-    @register(
-        "a13_pq_recall_floor",
-        oracle="""
+def _top20_oracle(flag: str, scope: str = "", indexed_total: bool = False) -> str:
+    """The gate rows' DuckDB oracle: queries vec_id < 5, corpus vec_id
+    in [5, 2000) (``scope`` narrows it), exact top-20 per query by
+    (cosine desc, vec_id), TRUE for ``flag``. ``indexed_total`` adds
+    the replayed count of nonzero non-null slice vectors."""
+    n_cte, n_col, n_from = "", "", ""
+    if indexed_total:
+        n_cte = """, n AS (
+          SELECT CAST(COUNT(*) AS BIGINT) AS indexed_total
+          FROM embeddings
+          WHERE vec_id >= 5 AND vec_id < 2000
+            AND embedding IS NOT NULL
+            AND list_dot_product(embedding::DOUBLE[], embedding::DOUBLE[]) > 0
+        )"""
+        n_col, n_from = ", n.indexed_total", ", n"
+    return f"""
         WITH q AS (
           SELECT vec_id AS q_id, embedding::DOUBLE[] AS qv
           FROM embeddings WHERE vec_id < 5
         ), corpus AS (
           SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings
-          WHERE vec_id >= 5 AND vec_id < 2000
-        )
+          WHERE vec_id >= 5 AND vec_id < 2000{scope}
+        ){n_cte}
         SELECT q.q_id, c.vec_id,
                ROUND(list_cosine_similarity(c.v, q.qv), 6) AS score,
-               TRUE AS pq_ok
-        FROM q, LATERAL (
+               TRUE AS {flag}{n_col}
+        FROM q{n_from}, LATERAL (
           SELECT vec_id, v FROM corpus
           ORDER BY list_cosine_similarity(v, q.qv) DESC, vec_id
           LIMIT 20) c
-        """,
+        """
+
+
+def _gate_inputs(spark: SparkSession, sf_dir: str):
+    """(query rows vec_id < 5, corpus slice [5, 2000)) of a gate row."""
+    emb = _emb(spark, sf_dir)
+    qrows = [
+        (r["vec_id"], r["embedding"])
+        for r in emb.filter(F.col("vec_id") < 5)
+        .select("vec_id", "embedding")
+        .collect()
+    ]
+    return qrows, emb.filter((F.col("vec_id") >= 5) & (F.col("vec_id") < 2000))
+
+
+def _by_query(rows, scored: bool = False) -> dict[int, set]:
+    """q_id → set of vec_ids (or (vec_id, score) pairs) of result rows."""
+    out: dict[int, set] = {}
+    for r in rows:
+        out.setdefault(r["q_id"], set()).add(
+            (r["vec_id"], r["score"]) if scored else r["vec_id"]
+        )
+    return out
+
+
+def _recall_ok(got: set, want: set, floor: float) -> bool:
+    return len(got & want) >= floor * len(want)
+
+
+def _top20_gate(
+    spark: SparkSession, corpus: DataFrame, qrows: list, flag: str, verdict
+) -> DataFrame:
+    """The gate rows' body: the exact top-20 per query (hash-checked
+    value-for-value against ``_top20_oracle``) joined with the boolean
+    ``flag`` = ``verdict(q_id, exact top-20 ids)``."""
+    exact = exact_knn_join(corpus, qrows, k=20)
+    want = _by_query(exact.collect())  # bounded: nq × 20
+    ok = spark.createDataFrame(
+        [(q, bool(verdict(q, want[q]))) for q, _qv in qrows if q in want],
+        f"q_id long, {flag} boolean",
     )
+    return exact.join(ok, "q_id").select("q_id", "vec_id", "score", flag)
+
+
+def _register_pq():
+    @register("a13_pq_recall_floor", oracle=_top20_oracle("pq_ok"))
     def a13_pq_recall_floor(spark: SparkSession, sf_dir: str) -> DataFrame:
         """Exact top-20 per query (hash-checked value-for-value
         against the oracle) + a per-query boolean: PQ-ADC
@@ -2137,47 +2149,23 @@ def _register_pq():
         r14 — the a15 build-once convention): repeat timings measure
         the batched ADC probe; the artifact is deterministic, so the
         correctness row is unchanged."""
-        import os
-
-        emb = _emb(spark, sf_dir)
-        qrows = [
-            (r["vec_id"], r["embedding"])
-            for r in emb.filter(F.col("vec_id") < 5)
-            .select("vec_id", "embedding")
-            .collect()
-        ]
-        corpus = emb.filter((F.col("vec_id") >= 5) & (F.col("vec_id") < 2000))
-        exact = exact_knn_join(corpus, qrows, k=20)
+        qrows, corpus = _gate_inputs(spark, sf_dir)
         books, codes_path = pq_build_cached(
             corpus, cache_key=(os.path.realpath(sf_dir), "pq", 5, 2000)
         )
-        codes = spark.read.parquet(codes_path)
-        exact_ids: dict[int, set] = {}
-        for r in exact.collect():  # bounded: 5 queries × 20 rows
-            exact_ids.setdefault(r["q_id"], set()).add(r["vec_id"])
         # ONE batched plan for all 5 probes (VERDICT r13 item 1: the
-        # per-query pq_topk_refined loop was 5 sequential job chains
-        # and this row the registry's heaviest). pq_knn_join is
-        # per-query identical to the solo path — pinned by
-        # test_pq_knn_join_matches_solo_path — so the recall sets and
-        # the floor verdicts are unchanged. Fresh pq_encode output:
-        # ids unique by construction, skip the dedup exchange.
-        got_ids: dict[int, set] = {}
-        for r in pq_knn_join(
-            codes, books, corpus, qrows, k=20, shortlist=200,
-            dedup_ids=False,
-        ).collect():  # bounded: 5 × 20
-            got_ids.setdefault(r["q_id"], set()).add(r["vec_id"])
-        ok_rows = []
-        for q_id, _qv in qrows:
-            if q_id not in exact_ids:
-                continue
-            want = exact_ids[q_id]
-            got = got_ids.get(q_id, set())
-            ok_rows.append((q_id, len(got & want) >= 0.6 * len(want)))
-        ok = spark.createDataFrame(ok_rows, "q_id long, pq_ok boolean")
-        return exact.join(ok, "q_id").select(
-            "q_id", "vec_id", "score", "pq_ok"
+        # per-query loop was 5 sequential job chains). Fresh
+        # pq_encode output: ids unique by construction, skip the
+        # dedup exchange.
+        got = _by_query(
+            pq_knn_join(
+                spark.read.parquet(codes_path), books, corpus, qrows, k=20,
+                shortlist=200, dedup_ids=False,
+            ).collect()  # bounded: 5 × 20
+        )
+        return _top20_gate(
+            spark, corpus, qrows, "pq_ok",
+            lambda q, want: _recall_ok(got.get(q, set()), want, 0.6),
         )
 
     @register(
@@ -2228,14 +2216,14 @@ _register_pq()
 # compression tier: PQ above is the 32× / recall-tradeoff end; SQ8 is
 # the 4× / near-exact end (dim-64 float32 = 256 B → 64 B, one byte
 # per dimension), the default first step production vector stores
-# take before PQ. Everything here is pure codegen — train is one
+# take before PQ. Train and encode are pure codegen — train is one
 # posexplode aggregate (map-side combined to d rows), encode is
 # zip_with/aggregate over per-dim literal arrays (ONE F.expr parse
-# per array, the a08 lesson), and the batched probe scores every
-# query in a single scan with zero Python: the approximate cosine
-# factors as (C_q + Σ_d code_d·w_qd) / |x̂|, where w_qd and C_q are
-# per-query literals and |x̂| (the reconstructed norm) is computed
-# once at ENCODE time and stored beside the codes.
+# per array, the a08 lesson) — and the batched probe scores every
+# query in a single scan: the approximate cosine factors as
+# (C_q + Σ_d code_d·w_qd) / |x̂|, where w_qd and C_q are per-query
+# constants and |x̂| (the reconstructed norm) is computed once at
+# ENCODE time and stored beside the codes.
 # ---------------------------------------------------------------------------
 def _arr_lit(vals) -> "F.Column":
     """One JVM-side parse for a literal double array (per-element
@@ -2364,7 +2352,6 @@ def sq8_knn_join(
     shortlist: int = 200,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    codegen: bool = False,
 ) -> DataFrame:
     """Batched SQ8 retrieval, ONE plan: for each query the
     approximate cosine over the int8 codes factors as
@@ -2372,168 +2359,53 @@ def sq8_knn_join(
         score_q(row) = (C_q + Σ_d code_d · w_qd) / norm_r
 
     with w_qd = q̂_d·span_d/255 and C_q = Σ_d lo_d·q̂_d per-query
-    constants — so the whole batch is one scoring pass over the
-    codes, one per-query shortlist window, and one exact refine over
-    the shortlist union (broadcast semi-join + exact_knn_join — the
-    pq_topk_refined shape). Returns (q_id, id, score), per-query
-    top-k by exact cosine.
+    constants — so the whole batch's scores are ONE BLAS matmul per
+    Arrow batch, (nq, d) weights @ (d, rows) codes, with a per-batch
+    partial top-shortlist cut before the exchange, one per-query
+    shortlist window, and one exact refine over the shortlist union
+    (broadcast semi-join + exact_knn_join). Returns (q_id, id,
+    score), per-query top-k by exact cosine. The union is a superset
+    of every query's own shortlist, so per-query recall can only
+    improve; deterministic either way.
 
-    Two scoring backends, identical results (pinned in tests):
+    Why a numpy kernel and not zip_with/aggregate expressions over
+    literal weight arrays (r15 ladder measurement): Spark evaluates
+    higher-order-function lambdas INTERPRETIVELY per array element
+    (the r10 HOF finding), so that scan costs O(nq·n·d) interpreted
+    ops — 26 s vs ~2 s for this kernel at 200k rows × 20 queries,
+    slower than exact brute force.
 
-    - DEFAULT (Arrow kernel): the whole batch's scores are ONE BLAS
-      matmul per Arrow batch — (nq, d) weights @ (d, rows) codes —
-      with a per-batch partial top-shortlist cut before the exchange
-      (the pq_knn_join shape). Measured at 200k rows × 20 queries:
-      ~2 s vs 26 s for the codegen form.
-    - ``codegen=True``: zip_with/aggregate expressions with literal
-      weight arrays — NO Python anywhere in the plan. Elegant but a
-      trap at scale (r15 ladder measurement): Spark evaluates
-      higher-order-function lambdas INTERPRETIVELY per array element
-      (the r10 HOF finding), so the scan costs O(nq·n·d) interpreted
-      ops — slower than exact brute force at 200k×20. Use for
-      single queries / small corpora, or where a no-Python plan is
-      worth more than throughput.
-
-    Dirty-code contract (both backends): NULL, truncated, or
-    overlong code rows and null/zero norms score NULL / are skipped —
-    dropped, never retrieved, never abort."""
+    Dirty-code contract: NULL, truncated, overlong or out-of-range
+    code rows and null/zero norms are skipped — dropped, never
+    retrieved, never abort."""
     import numpy as np
 
-    spark = codes_df.sparkSession
-    query_rows = _drop_zero_queries(query_rows, "sq8_knn_join")
+    query_rows, q_ids, qm = _prep_queries(query_rows, "sq8_knn_join")
     if not query_rows:
-        return spark.createDataFrame(
-            [], f"q_id long, {id_col} long, score double"
-        )
-    d = len(bounds)
+        return _knn_empty(codes_df.sparkSession, id_col)
     lo = np.array([b[0] for b in bounds])
     span = np.array([b[1] for b in bounds])
-    q_ids = np.array([q[0] for q in query_rows], dtype=np.int64)
-    qm = np.array([list(q[1]) for q in query_rows], dtype=np.float64)
-    qm = qm / np.sqrt((qm * qm).sum(axis=1))[:, None]
-
-    if codegen:
-        structs = []
-        for j, (q_id, _qv) in enumerate(query_rows):
-            q = qm[j]
-            w = q * span / 255.0
-            c0 = float((lo * q).sum())
-            dot = F.aggregate(
-                F.zip_with(
-                    F.col("codes"),
-                    _arr_lit(w),
-                    lambda c, ww: c.cast("double") * ww,
-                ),
-                F.lit(0.0),
-                lambda acc, x: acc + x,
-            )
-            score = F.when(
-                (F.size("codes") == d) & (F.col("norm_r") > 0.0),
-                (F.lit(c0) + dot) / F.col("norm_r"),
-            )
-            structs.append(
-                F.struct(
-                    F.lit(int(q_id)).cast("long").alias("q_id"),
-                    score.alias("score_sq"),
-                )
-            )
-        scored = (
-            codes_df.select(id_col, F.explode(F.array(*structs)).alias("s"))
-            .select(
-                id_col,
-                F.col("s.q_id").alias("q_id"),
-                F.col("s.score_sq").alias("score_sq"),
-            )
-            .filter(F.col("score_sq").isNotNull())
-        )
-    else:
-        import pandas as pd
-
-        wmat = qm * (span / 255.0)[None, :]  # (nq, d)
-        c0s = qm @ lo  # (nq,)
-        state = {"q_ids": q_ids, "wmat": wmat, "c0s": c0s}
-        state_bytes = wmat.nbytes + c0s.nbytes
-        if state_bytes > _BROADCAST_STATE_BYTES:
-            bc = spark.sparkContext.broadcast(state)
-            get_state = lambda: bc.value  # noqa: E731
-        else:
-            get_state = lambda: state  # noqa: E731
-        sl = shortlist
-        sq_schema = T.StructType(
-            [
-                T.StructField("q_id", T.LongType()),
-                T.StructField(id_col, T.LongType()),
-                T.StructField("score_sq", T.DoubleType()),
-            ]
-        )
-
-        def sq_partial(batches):
-            st = get_state()
-            b_qids, b_w, b_c0 = st["q_ids"], st["wmat"], st["c0s"]
-            for pdf in batches:
-                raw = pdf["codes"].tolist()
-                if not len(raw):
-                    continue
-                ids = pdf[id_col].to_numpy()
-                norms = pdf["norm_r"].fillna(0.0).to_numpy(dtype=np.float64)
-                codes = np.array(
-                    [
-                        c
-                        if c is not None
-                        and len(c) == d
-                        and all(x is not None for x in c)
-                        else [-1] * d
-                        for c in raw
-                    ],
-                    dtype=np.float64,
-                )
-                valid = (codes[:, 0] >= 0) & (norms > 0.0)
-                ids, codes, norms = ids[valid], codes[valid], norms[valid]
-                if not len(ids):
-                    continue
-                # ONE matmul for the whole (batch × query) grid
-                sims = (b_w @ codes.T + b_c0[:, None]) / norms[None, :]
-                qi_out, id_out, sc_out = [], [], []
-                kk = min(sl, len(ids))
-                for j in range(len(b_qids)):
-                    col = sims[j]
-                    if len(col) > kk:
-                        thresh = np.partition(col, -kk)[-kk]
-                        cand = np.nonzero(col >= thresh)[0]
-                    else:
-                        cand = np.arange(len(col))
-                    order = cand[np.lexsort((ids[cand], -col[cand]))][:kk]
-                    qi_out.append(
-                        np.full(len(order), b_qids[j], dtype=np.int64)
-                    )
-                    id_out.append(ids[order])
-                    sc_out.append(col[order])
-                yield pd.DataFrame(
-                    {
-                        "q_id": np.concatenate(qi_out) if qi_out else [],
-                        id_col: np.concatenate(id_out) if id_out else [],
-                        "score_sq": np.concatenate(sc_out) if sc_out else [],
-                    }
-                )
-
-        scored = codes_df.select(id_col, "codes", "norm_r").mapInPandas(
-            sq_partial, sq_schema
-        )
-    w_short = W.partitionBy("q_id").orderBy(F.col("score_sq").desc(), id_col)
-    short = (
-        scored.withColumn("rn", F.row_number().over(w_short))
-        .filter(F.col("rn") <= shortlist)
-        .select("q_id", id_col)
+    get_state = _ship(
+        codes_df.sparkSession,
+        {"q_ids": q_ids, "wmat": qm * (span / 255.0)[None, :], "c0s": qm @ lo},
     )
-    # exact refine over the shortlist UNION (nq×shortlist-bounded):
-    # a superset of every query's own shortlist, so per-query recall
-    # can only improve; deterministic either way
+
+    decode = _code_decoder(len(bounds), 256)
+
+    def sq8(pdf, st):
+        codes, valid = decode(pdf["codes"].tolist())
+        norms = pdf["norm_r"].fillna(0.0).to_numpy(dtype=np.float64)
+        valid &= norms > 0.0
+        codes = codes[valid].astype(np.float64)
+        return valid, (st["wmat"] @ codes.T + st["c0s"][:, None]) / norms[valid][None, :]
+
+    short = _topk_scan(
+        codes_df.select(id_col, "codes", "norm_r"), get_state, sq8, shortlist, id_col
+    )
     sub = emb.join(
         F.broadcast(short.select(id_col).distinct()), id_col, "left_semi"
     )
-    return exact_knn_join(
-        sub, query_rows, k=k, id_col=id_col, vec_col=vec_col
-    )
+    return exact_knn_join(sub, query_rows, k=k, id_col=id_col, vec_col=vec_col)
 
 
 # Build-once-probe-many (the pq_build_cached convention): bounds +
@@ -2563,25 +2435,7 @@ def sq8_build_cached(emb: DataFrame, cache_key: tuple):
 
 
 def _register_sq8():
-    @register(
-        "a19_sq8_recall_floor",
-        oracle="""
-        WITH q AS (
-          SELECT vec_id AS q_id, embedding::DOUBLE[] AS qv
-          FROM embeddings WHERE vec_id < 5
-        ), corpus AS (
-          SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings
-          WHERE vec_id >= 5 AND vec_id < 2000
-        )
-        SELECT q.q_id, c.vec_id,
-               ROUND(list_cosine_similarity(c.v, q.qv), 6) AS score,
-               TRUE AS sq8_ok
-        FROM q, LATERAL (
-          SELECT vec_id, v FROM corpus
-          ORDER BY list_cosine_similarity(v, q.qv) DESC, vec_id
-          LIMIT 20) c
-        """,
-    )
+    @register("a19_sq8_recall_floor", oracle=_top20_oracle("sq8_ok"))
     def a19_sq8_recall_floor(spark: SparkSession, sf_dir: str) -> DataFrame:
         """Int8 scalar quantization on the official record (the a13
         pattern, at the 4× tier): exact top-20 hash-checked
@@ -2591,43 +2445,25 @@ def _register_sq8():
         span/510 barely reorders a 64-dim cosine, so the shortlist
         virtually always contains the true top-20; floor set below
         the PQ row's because this tier exists to be near-exact).
-        The whole probe batch runs in ONE pure-codegen plan — no
-        Arrow kernel, no Python in the scan (see sq8_knn_join). The
-        bounds + codes build at most once per process
-        (sq8_build_cached): repeat timings measure the probe over
-        the persisted 64 B/row codes."""
-        import os
-
-        emb = _emb(spark, sf_dir)
-        qrows = [
-            (r["vec_id"], r["embedding"])
-            for r in emb.filter(F.col("vec_id") < 5)
-            .select("vec_id", "embedding")
-            .collect()
-        ]
-        corpus = emb.filter((F.col("vec_id") >= 5) & (F.col("vec_id") < 2000))
-        exact = exact_knn_join(corpus, qrows, k=20)
+        The whole probe batch runs in ONE plan — one matmul per
+        Arrow batch of the codes scan, then the exact refine (see
+        sq8_knn_join). The bounds + codes build at most once per
+        process (sq8_build_cached): repeat timings measure the probe
+        over the persisted 64 B/row codes."""
+        qrows, corpus = _gate_inputs(spark, sf_dir)
         bounds, codes_path = sq8_build_cached(
             corpus, cache_key=(os.path.realpath(sf_dir), "sq8", 5, 2000)
         )
-        codes = spark.read.parquet(codes_path)
-        exact_ids: dict[int, set] = {}
-        for r in exact.collect():  # bounded: 5 × 20
-            exact_ids.setdefault(r["q_id"], set()).add(r["vec_id"])
-        got_ids: dict[int, set] = {}
-        for r in sq8_knn_join(
-            codes, bounds, corpus, qrows, k=20, shortlist=200
-        ).collect():  # bounded: 5 × 20
-            got_ids.setdefault(r["q_id"], set()).add(r["vec_id"])
-        ok_rows = []
-        for q_id, _qv in qrows:
-            if q_id not in exact_ids:
-                continue
-            want = exact_ids[q_id]
-            got = got_ids.get(q_id, set())
-            ok_rows.append((q_id, len(got & want) >= 0.8 * len(want)))
-        ok = spark.createDataFrame(ok_rows, "q_id long, sq8_ok boolean")
-        return exact.join(ok, "q_id").select("q_id", "vec_id", "score", "sq8_ok")
+        got = _by_query(
+            sq8_knn_join(
+                spark.read.parquet(codes_path), bounds, corpus, qrows, k=20,
+                shortlist=200,
+            ).collect()  # bounded: 5 × 20
+        )
+        return _top20_gate(
+            spark, corpus, qrows, "sq8_ok",
+            lambda q, want: _recall_ok(got.get(q, set()), want, 0.8),
+        )
 
     return a19_sq8_recall_floor
 
@@ -3168,7 +3004,9 @@ def _index_may_hold_duplicates(index_path: str) -> bool:
     index)."""
     try:
         return int(read_ivfpq_meta(index_path).get("appends", 1)) > 0
-    except Exception:  # noqa: BLE001 — no provenance: assume the worst
+    except (ValueError, TypeError, OverflowError):
+        # no provenance, or an appends counter int() cannot read
+        # (null, text, Infinity): assume the worst
         return True
 
 
@@ -3186,33 +3024,15 @@ def ivf_pq_topk(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> DataFrame:
-    """Probe the nprobe nearest cells (driver-side over the bounded
-    centroid list), ADC-score just those partitions' code rows in
-    codegen, then exact-refine the shortlist — IVF pruning × PQ
-    compression × exact re-rank composed from their tested parts.
-    The shortlist dedups ids only when the sidecar says the index has
-    un-compacted appends (see ``_index_may_hold_duplicates``) — a
-    fresh or compacted index keeps the shuffle-free ADC plan."""
-    cells = _probe_cells(centroids, list(query_vec), nprobe)
-    codes = spark.read.parquet(index_path).filter(F.col("cell").isin(cells))
-    short = pq_topk(
-        codes,
-        codebooks,
-        query_vec,
-        k=shortlist,
-        id_col=id_col,
-        dedup_ids=_index_may_hold_duplicates(index_path),
+    """ONE query through the persisted IVF-ADC index:
+    ``ivf_pq_knn_join`` on a batch of one — probe the nprobe nearest
+    cells, ADC-score just those partitions' code rows, exact-refine
+    the shortlist. Per-query masking makes this exactly the answer
+    the query gets inside any batch (pinned in tests/test_vectors.py)."""
+    return ivf_pq_knn_join(
+        spark, index_path, centroids, codebooks, emb, [(q_id, list(query_vec))],
+        k=k, nprobe=nprobe, shortlist=shortlist, id_col=id_col, vec_col=vec_col,
     )
-    sub = emb.join(F.broadcast(short.select(id_col)), id_col, "left_semi")
-    return exact_knn_join(sub, [(q_id, list(query_vec))], k=k, id_col=id_col, vec_col=vec_col)
-
-
-# Executor-state shipping threshold for the batched probe: above this,
-# the (nq, m, k_codes) LUT + probe sets go out as a Spark broadcast
-# (once per executor); below it, closure capture is cheaper than the
-# torrent setup (a 20-query LUT is ~330 KB). Module-level so tests can
-# force the broadcast path at small nq.
-_BROADCAST_STATE_BYTES = 4 * 1024 * 1024
 
 
 def ivf_pq_knn_join(
@@ -3232,8 +3052,8 @@ def ivf_pq_knn_join(
 ) -> DataFrame:
     """Batched retrieval through the persisted IVF-ADC index: the PQ
     twin of ``ivf_knn_join`` (a09) and the shape a query STREAM pays
-    at 100 TB — ``ivf_pq_topk`` launches one probe job chain per
-    query; this runs the whole batch (the a15 gate rides it for its
+    at 100 TB — one probe per query pays the fixed job-chain overhead
+    nq times; this runs the whole batch (the a15 gate rides it for its
     5 probes since r14) in ONE plan: a single partition-pruned scan of the
     union of all queries' probed cells, one Arrow pass computing
     every query's ADC scores against its own LUT, one window for the
@@ -3242,14 +3062,9 @@ def ivf_pq_knn_join(
     Per-query masking everywhere (the a09 rule): a query only scores
     code rows whose cell is in ITS probe set, and only re-ranks ITS
     shortlist — so a query's result never depends on which other
-    queries shared the batch.
-
-    The single-query path builds its LUT as one codegen literal
-    (pq_topk); at batch size that plan would carry nq×m×k_codes
-    literal doubles, so the batch path keeps the LUTs executor-side
-    in the same Arrow-batched numpy kernel ivf_knn_join uses — the
-    per-row work is m table lookups + adds over the (nq, m, k_codes)
-    table, vectorized over the batch.
+    queries shared the batch, and ``ivf_pq_topk`` is this function on
+    a batch of one. The LUTs stay executor-side (a codegen literal
+    would carry nq×m×k_codes doubles in the plan).
 
     Dirty-code contract matches ``pq_topk``'s F.get semantics: a
     code row that is NULL, truncated, out-of-range, or negative is
@@ -3281,143 +3096,18 @@ def ivf_pq_knn_join(
     amortized across every probe batch; the histogram only changes
     on append). Batch independence is preserved: the addition is
     the same for every query, so a query's probe set still depends
-    only on its own vector and the call's parameters."""
-    import numpy as np
-    import pandas as pd
+    only on its own vector and the call's parameters.
 
-    query_rows = _drop_zero_queries(query_rows, "ivf_pq_knn_join")
+    Replay-dedup (VERDICT r12 item 2): an at-least-once appended index
+    holds duplicate id rows with identical codes; without a collapse
+    each copy takes its own shortlist slot and can crowd out the true
+    k-th id. It is paid only inside the lifecycle window where
+    duplicates are possible — the sidecar is consulted ONCE,
+    driver-side (see ``_index_may_hold_duplicates``)."""
+    query_rows, q_ids, qm = _prep_queries(query_rows, "ivf_pq_knn_join")
     if not query_rows:
-        return spark.createDataFrame([], f"q_id long, {id_col} long, score double")
-    q_ids = np.array([q[0] for q in query_rows], dtype=np.int64)
-    qm = np.array([list(q[1]) for q in query_rows], dtype=np.float64)
-    qn = np.sqrt((qm * qm).sum(axis=1))
-    qn[qn == 0.0] = 1.0
-    qm = qm / qn[:, None]
-    steer = {int(c) for c in extra_cells} if extra_cells else set()
-    probe_sets = [
-        set(_probe_cells(centroids, list(q[1]), nprobe)) | steer
-        for q in query_rows
-    ]
-    all_cells = sorted(set().union(*probe_sets))
-    probe_arrs = [np.fromiter(s, dtype=np.int64) for s in probe_sets]
-
-    books = [np.asarray(c, dtype=np.float64) for c in codebooks]
-    m, dsub = len(books), books[0].shape[1]
-    k_codes = books[0].shape[0]
-    # (nq, m, k_codes): luts[j, s, c] = <query j, codebook s entry c>
-    luts = np.stack(
-        [
-            np.stack([books[s] @ qm[j, s * dsub : (s + 1) * dsub] for s in range(m)])
-            for j in range(len(q_ids))
-        ]
-    )
-
-    # Ship the per-query state to executors ONCE (VERDICT r12 item 4):
-    # closure-capturing luts + probe sets serializes ~nq×m×k_codes×8 B
-    # into EVERY task's pickled function (~16 MB at nq=1000,
-    # re-deserialized per task); a Spark broadcast moves it once per
-    # executor over the torrent channel instead. The broadcast handle
-    # lives inside the returned plan's closures, so the ContextCleaner
-    # reclaims it when the consumer drops the DataFrame — an explicit
-    # destroy() here would race the (lazy) execution. Below ~4 MB the
-    # torrent setup costs more than it saves (a 20-query LUT is
-    # ~330 KB), so small batches keep plain closure capture.
-    state = {"q_ids": q_ids, "qm": qm, "luts": luts, "probe_arrs": probe_arrs}
-    state_bytes = luts.nbytes + qm.nbytes + sum(a.nbytes for a in probe_arrs)
-    if state_bytes > _BROADCAST_STATE_BYTES:
-        bc = spark.sparkContext.broadcast(state)
-        get_state = lambda: bc.value  # noqa: E731
-    else:
-        get_state = lambda: state  # noqa: E731
-
-    adc_schema = T.StructType(
-        [
-            T.StructField("q_id", T.LongType()),
-            T.StructField(id_col, T.LongType()),
-            T.StructField("score_pq", T.DoubleType()),
-        ]
-    )
-    sl = shortlist
-    # Consult the sidecar ONCE, driver-side: the kernel's in-batch
-    # dedup below and the post-kernel groupBy-max are gated on the
-    # same duplicates-possible certificate.
-    may_dup = _index_may_hold_duplicates(index_path)
-
-    def adc_partial(batches):
-        st = get_state()
-        b_qids, b_luts = st["q_ids"], st["luts"]
-        b_probes = st["probe_arrs"]
-        for pdf in batches:
-            raw = pdf["codes"].tolist()
-            # empty-batch guard (ADVICE r12): np.array([]) is 1-D, so
-            # the .all(axis=1) below would raise AxisError and abort
-            # the probe instead of skipping the batch
-            if not len(raw):
-                continue
-            ids = pdf[id_col].to_numpy()
-            cells = pdf["cell"].to_numpy()
-            codes = np.array(
-                [
-                    c
-                    if c is not None
-                    and len(c) == m
-                    and all(x is not None for x in c)
-                    else [-1] * m
-                    for c in raw
-                ],
-                dtype=np.int64,
-            )
-            valid = ((codes >= 0) & (codes < k_codes)).all(axis=1)
-            ids, cells, codes = ids[valid], cells[valid], codes[valid]
-            if not len(ids):
-                continue
-            sims = np.zeros((len(b_qids), len(ids)), dtype=np.float64)
-            for s in range(m):
-                sims += b_luts[:, s, :][:, codes[:, s]]
-            qi_out, id_out, sc_out = [], [], []
-            # ADVICE r14 (medium), the pq_knn_join fix applied here:
-            # kk counts rows, so without an in-batch collapse each
-            # replayed copy of a high-ranking id eats its own per-batch
-            # slot and can evict a distinct id. Collapse happens per
-            # query AFTER the probe mask (max over copies — a copy in
-            # an unprobed cell stays -inf); cross-batch copies are
-            # still handled by the groupBy-max downstream.
-            has_dup = False
-            if may_dup:
-                uniq, inv = np.unique(ids, return_inverse=True)
-                has_dup = len(uniq) < len(ids)
-            kk = min(sl, len(uniq) if has_dup else len(ids))
-            for j in range(len(b_qids)):
-                col = np.where(np.isin(cells, b_probes[j]), sims[j], -np.inf)
-                row_ids = ids
-                if has_dup:
-                    colu = np.full(len(uniq), -np.inf)
-                    np.maximum.at(colu, inv, col)
-                    col, row_ids = colu, uniq
-                if len(col) > kk:
-                    # When query j has fewer than kk in-probe rows in
-                    # this batch, the kk-th value is -inf and
-                    # `col >= thresh` would admit MASKED rows — cells
-                    # query j never probed — breaking per-query batch
-                    # independence (ADVICE r12 high; a09's kernel
-                    # filters score > -inf for the same reason).
-                    thresh = np.partition(col, -kk)[-kk]
-                    cand = np.nonzero(col >= thresh)[0]
-                    cand = cand[np.isfinite(col[cand])]
-                else:
-                    cand = np.nonzero(col > -np.inf)[0]
-                order = cand[np.lexsort((row_ids[cand], -col[cand]))][:kk]
-                qi_out.append(np.full(len(order), b_qids[j], dtype=np.int64))
-                id_out.append(row_ids[order])
-                sc_out.append(col[order])
-            yield pd.DataFrame(
-                {
-                    "q_id": np.concatenate(qi_out) if qi_out else [],
-                    id_col: np.concatenate(id_out) if id_out else [],
-                    "score_pq": np.concatenate(sc_out) if sc_out else [],
-                }
-            )
-
+        return _knn_empty(spark, id_col)
+    all_cells, probes = _ivf_probes(centroids, query_rows, nprobe, extra_cells)
     codes_scan = (
         spark.read.parquet(index_path)
         .filter(F.col("cell").isin(all_cells))
@@ -3430,98 +3120,14 @@ def ivf_pq_knn_join(
         codes_scan = codes_scan.join(
             eligible.select(id_col).distinct(), id_col, "left_semi"
         )
-    w = W.partitionBy("q_id").orderBy(F.col("score_pq").desc(), id_col)
-    short = codes_scan.mapInPandas(adc_partial, adc_schema)
-    # Replay-dedup (VERDICT r12 item 2, ADVICE medium): an
-    # at-least-once appended index holds duplicate id rows with
-    # identical codes; without this each copy takes its own
-    # row_number — eating shortlist depth here and, downstream,
-    # putting the same id twice into a final top-k while crowding
-    # out the true k-th (ann_knn_join's dropDuplicates at its
-    # candidate step is the same rule). Shortlist-sized exchange,
-    # paid only inside the lifecycle window where duplicates are
-    # possible (un-compacted appends — see _index_may_hold_duplicates).
-    # groupBy-max, not dropDuplicates: matches pq_topk's deterministic
-    # contract — replayed copies carry identical codes so max() is a
-    # no-op today, but if a partially corrupt replay ever wrote
-    # divergent codes, an arbitrary-row keep would make the batched
-    # shortlist nondeterministic while the single-query path stays
-    # deterministic (ADVICE r13).
-    if may_dup:
-        short = short.groupBy("q_id", id_col).agg(
-            F.max("score_pq").alias("score_pq")
-        )
-    short = (
-        short.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= sl)
-        .select("q_id", id_col)
-    )
-
-    # exact refine, still per-query: fetch only shortlisted vectors
-    # (one broadcast join onto the corpus — the shortlist union is
-    # nq×shortlist-bounded), score each (q_id, vec_id) PAIR against
-    # that query's vector, window the final top-k
-    refine_in = emb.select(id_col, vec_col).join(F.broadcast(short), id_col)
-
-    out_schema = T.StructType(
-        [
-            T.StructField("q_id", T.LongType()),
-            T.StructField(id_col, T.LongType()),
-            T.StructField("score", T.DoubleType()),
-        ]
-    )
-
-    def exact_pairs(batches):
-        st = get_state()
-        b_qm = st["qm"]
-        q_index = {int(q): j for j, q in enumerate(st["q_ids"])}
-        for pdf in batches:
-            if not len(pdf):  # same empty-batch guard as adc_partial
-                continue
-            ids = pdf[id_col].to_numpy()
-            qs = pdf["q_id"].to_numpy()
-            x = np.array(pdf[vec_col].tolist(), dtype=np.float64)
-            norms = np.sqrt((x * x).sum(axis=1))
-            keep = norms > 0.0
-            ids, qs, x, norms = ids[keep], qs[keep], x[keep], norms[keep]
-            if not len(ids):
-                continue
-            qrows = b_qm[[q_index[int(q)] for q in qs]]
-            scores = (x / norms[:, None] * qrows).sum(axis=1)
-            yield pd.DataFrame({"q_id": qs, id_col: ids, "score": scores})
-
-    wf = W.partitionBy("q_id").orderBy(F.col("score").desc(), id_col)
-    return (
-        refine_in.filter(
-            F.col(vec_col).isNotNull() & (F.size(vec_col) == qm.shape[1])
-        )
-        .mapInPandas(exact_pairs, out_schema)
-        .withColumn("rn", F.row_number().over(wf))
-        .filter(F.col("rn") <= k)
-        .select("q_id", id_col, F.round("score", 6).alias("score"))
+    return _adc_knn(
+        codes_scan, codebooks, emb, q_ids, qm, k, shortlist, id_col, vec_col,
+        _index_may_hold_duplicates(index_path), probes,
     )
 
 
 def _register_ivf_pq():
-    @register(
-        "a15_ivf_pq_recall_floor",
-        oracle="""
-        WITH q AS (
-          SELECT vec_id AS q_id, embedding::DOUBLE[] AS qv
-          FROM embeddings WHERE vec_id < 5
-        ), corpus AS (
-          SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings
-          WHERE vec_id >= 5 AND vec_id < 2000
-        )
-        SELECT q.q_id, c.vec_id,
-               ROUND(list_cosine_similarity(c.v, q.qv), 6) AS score,
-               TRUE AS ivf_pq_ok
-        FROM q, LATERAL (
-          SELECT vec_id, v FROM corpus
-          ORDER BY list_cosine_similarity(v, q.qv) DESC, vec_id
-          LIMIT 20) c
-        """,
-    )
+    @register("a15_ivf_pq_recall_floor", oracle=_top20_oracle("ivf_pq_ok"))
     def a15_ivf_pq_recall_floor(spark: SparkSession, sf_dir: str) -> DataFrame:
         """The composed IVF-ADC index on the official record: exact
         top-20 hash-checked value-for-value + a per-query boolean
@@ -3543,49 +3149,25 @@ def _register_ivf_pq():
         measure the probe, matching the build-once/probe-many claim;
         the correctness row is unchanged — the cached index is the
         same deterministic artifact a fresh build produces."""
-        import os
-
-        emb = _emb(spark, sf_dir)
-        qrows = [
-            (r["vec_id"], r["embedding"])
-            for r in emb.filter(F.col("vec_id") < 5)
-            .select("vec_id", "embedding")
-            .collect()
-        ]
-        corpus = emb.filter((F.col("vec_id") >= 5) & (F.col("vec_id") < 2000))
-        exact = exact_knn_join(corpus, qrows, k=20)
+        qrows, corpus = _gate_inputs(spark, sf_dir)
         path, cents, books = ivf_pq_build_cached(
-            corpus,
-            cache_key=(os.path.realpath(sf_dir), "a15", 5, 2000),
-            k_cells=16,
-            m=8,
-            k_codes=256,
-            sample=2048,
+            corpus, cache_key=(os.path.realpath(sf_dir), "a15", 5, 2000)
         )
-        exact_ids: dict[int, set] = {}
-        for r in exact.collect():  # bounded: 5 × 20
-            exact_ids.setdefault(r["q_id"], set()).add(r["vec_id"])
-        # ONE batched probe for all 5 queries (VERDICT r13 item 1:
-        # the ivf_pq_topk loop was 5 sequential probe chains and this
-        # row the registry's second-heaviest). Same index, same
-        # nprobe=12: a17's in-gate solo≡batched assertion pins that
-        # ivf_pq_knn_join returns exactly what the per-query
-        # ivf_pq_topk chain returns, so each query's recall set and
-        # floor verdict are unchanged.
-        got_ids: dict[int, set] = {}
-        for r in ivf_pq_knn_join(
-            spark, path, cents, books, corpus, qrows, k=20, nprobe=12
-        ).collect():  # bounded: 5 × 20
-            got_ids.setdefault(r["q_id"], set()).add(r["vec_id"])
-        ok_rows = []
-        for q_id, _qv in qrows:
-            if q_id not in exact_ids:
-                continue
-            want = exact_ids[q_id]
-            got = got_ids.get(q_id, set())
-            ok_rows.append((q_id, len(got & want) >= 0.4 * len(want)))
-        ok = spark.createDataFrame(ok_rows, "q_id long, ivf_pq_ok boolean")
-        return exact.join(ok, "q_id").select("q_id", "vec_id", "score", "ivf_pq_ok")
+        # ONE batched probe for all 5 queries (VERDICT r13 item 1).
+        # The single-query ivf_pq_topk is this same call on a batch
+        # of one; a17's in-gate check and
+        # test_ivf_pq_topk_matches_batched_path pin that a query's
+        # result does not depend on its batch-mates, so each query's
+        # recall set and floor verdict match a per-query probe.
+        got = _by_query(
+            ivf_pq_knn_join(
+                spark, path, cents, books, corpus, qrows, k=20, nprobe=12
+            ).collect()  # bounded: 5 × 20
+        )
+        return _top20_gate(
+            spark, corpus, qrows, "ivf_pq_ok",
+            lambda q, want: _recall_ok(got.get(q, set()), want, 0.4),
+        )
 
     return a15_ivf_pq_recall_floor
 
@@ -3596,28 +3178,7 @@ _register_ivf_pq()
 def _register_ivf_pq_incremental():
     @register(
         "a16_ivf_pq_incremental",
-        oracle="""
-        WITH q AS (
-          SELECT vec_id AS q_id, embedding::DOUBLE[] AS qv
-          FROM embeddings WHERE vec_id < 5
-        ), corpus AS (
-          SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings
-          WHERE vec_id >= 5 AND vec_id < 2000
-        ), n AS (
-          SELECT CAST(COUNT(*) AS BIGINT) AS indexed_total
-          FROM embeddings
-          WHERE vec_id >= 5 AND vec_id < 2000
-            AND embedding IS NOT NULL
-            AND list_dot_product(embedding::DOUBLE[], embedding::DOUBLE[]) > 0
-        )
-        SELECT q.q_id, c.vec_id,
-               ROUND(list_cosine_similarity(c.v, q.qv), 6) AS score,
-               TRUE AS inc_ok, n.indexed_total
-        FROM q, n, LATERAL (
-          SELECT vec_id, v FROM corpus
-          ORDER BY list_cosine_similarity(v, q.qv) DESC, vec_id
-          LIMIT 20) c
-        """,
+        oracle=_top20_oracle("inc_ok", indexed_total=True),
     )
     def a16_ivf_pq_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
         """The IVF-ADC index LIFECYCLE on the official record
@@ -3648,32 +3209,22 @@ def _register_ivf_pq_incremental():
         id-bounded, so the copy is KBs) and runs the append + both
         drift refusals + every probe LIVE, so repeat timings measure
         the lifecycle the row exists to certify, not k-means."""
-        import os
         import shutil
+
+        import numpy as np
 
         from parquet_pipeline_spark.scratch import scratch_dir
 
         emb = _emb(spark, sf_dir)
-        qrows = [
-            (r["vec_id"], r["embedding"])
-            for r in emb.filter(F.col("vec_id") < 5)
-            .select("vec_id", "embedding")
-            .collect()
-        ]
+        qrows, full = _gate_inputs(spark, sf_dir)
         snapshot = emb.filter((F.col("vec_id") >= 5) & (F.col("vec_id") < 1500))
         batch = emb.filter((F.col("vec_id") >= 1500) & (F.col("vec_id") < 2000))
-        full = emb.filter((F.col("vec_id") >= 5) & (F.col("vec_id") < 2000))
 
         # model trained on the SNAPSHOT only — the batch arrives
         # later; built at most once per process, then copied so the
         # live append below never mutates the cached artifact
         base_path, cents, books = ivf_pq_build_cached(
-            snapshot,
-            cache_key=(os.path.realpath(sf_dir), "a16", 5, 1500),
-            k_cells=16,
-            m=8,
-            k_codes=256,
-            sample=2048,
+            snapshot, cache_key=(os.path.realpath(sf_dir), "a16", 5, 1500)
         )
         path = os.path.join(scratch_dir("a16_ivfpq_"), "idx.parquet")
         shutil.copytree(base_path, path)
@@ -3681,8 +3232,6 @@ def _register_ivf_pq_incremental():
 
         # staleness contract, exercised in-gate: drifted codebooks and
         # drifted centroids must both refuse without touching the index
-        import numpy as np
-
         drift_books = [np.asarray(b, dtype=np.float64) * 1.5 for b in books]
         drift_cents = [(cid, [v * 2.0 for v in vec]) for cid, vec in cents]
         refused = 0
@@ -3694,36 +3243,20 @@ def _register_ivf_pq_incremental():
         contract_ok = refused == 2
 
         indexed_total = spark.read.parquet(path).count()
-        exact = exact_knn_join(full, qrows, k=20)
-        exact_ids: dict[int, set] = {}
-        for r in exact.collect():  # bounded: 5 × 20
-            exact_ids.setdefault(r["q_id"], set()).add(r["vec_id"])
-        # probe the appended index with the BATCHED plan (one job
-        # chain for all 5 queries instead of 5 sequential chains;
-        # r13). The index has appends=1, so this is also the one
-        # official row that exercises the replay-dedup window
-        # (_index_may_hold_duplicates → shortlist dropDuplicates)
-        # in-gate on every run.
-        got_ids: dict[int, set] = {}
-        for r in ivf_pq_knn_join(
-            spark, path, cents, books, full, qrows, k=20, nprobe=12
-        ).collect():  # bounded: 5 × 20
-            got_ids.setdefault(r["q_id"], set()).add(r["vec_id"])
-        ok_rows = []
-        for q_id, _qv in qrows:
-            if q_id not in exact_ids:
-                continue
-            got = got_ids.get(q_id, set())
-            want = exact_ids[q_id]
-            ok_rows.append(
-                (q_id, contract_ok and len(got & want) >= 0.4 * len(want))
-            )
-        ok = spark.createDataFrame(ok_rows, "q_id long, inc_ok boolean")
-        return (
-            exact.join(ok, "q_id")
-            .withColumn("indexed_total", F.lit(int(indexed_total)).cast("bigint"))
-            .select("q_id", "vec_id", "score", "inc_ok", "indexed_total")
+        # probe the appended index with the BATCHED plan (r13). The
+        # index has appends=1, so this is also the one official row
+        # that exercises the replay-dedup window
+        # (_index_may_hold_duplicates → shortlist collapse) in-gate
+        # on every run.
+        got = _by_query(
+            ivf_pq_knn_join(
+                spark, path, cents, books, full, qrows, k=20, nprobe=12
+            ).collect()  # bounded: 5 × 20
         )
+        return _top20_gate(
+            spark, full, qrows, "inc_ok",
+            lambda q, want: contract_ok and _recall_ok(got.get(q, set()), want, 0.4),
+        ).withColumn("indexed_total", F.lit(int(indexed_total)).cast("bigint"))
 
     return a16_ivf_pq_incremental
 
@@ -3732,25 +3265,7 @@ _register_ivf_pq_incremental()
 
 
 def _register_ivf_pq_batch():
-    @register(
-        "a17_ivf_pq_batch_knn",
-        oracle="""
-        WITH q AS (
-          SELECT vec_id AS q_id, embedding::DOUBLE[] AS qv
-          FROM embeddings WHERE vec_id < 5
-        ), corpus AS (
-          SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings
-          WHERE vec_id >= 5 AND vec_id < 2000
-        )
-        SELECT q.q_id, c.vec_id,
-               ROUND(list_cosine_similarity(c.v, q.qv), 6) AS score,
-               TRUE AS batch_ok
-        FROM q, LATERAL (
-          SELECT vec_id, v FROM corpus
-          ORDER BY list_cosine_similarity(v, q.qv) DESC, vec_id
-          LIMIT 20) c
-        """,
-    )
+    @register("a17_ivf_pq_batch_knn", oracle=_top20_oracle("batch_ok"))
     def a17_ivf_pq_batch_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
         """Batched IVF-ADC retrieval (ivf_pq_knn_join) on the
         official record: exact top-20 hash-checked value-for-value,
@@ -3761,8 +3276,9 @@ def _register_ivf_pq_batch():
           one Arrow pass, one refine join) recovers ≥ 40% of the
           exact top-20 (the a15 floor: identical index, identical
           nprobe, so the batch path must probe at least as well), and
-        - batch independence: query 0 probed ALONE returns exactly
-          the rows it gets inside the batch — the per-query masking
+        - batch independence: query 0 probed ALONE (``ivf_pq_topk``)
+          returns exactly the rows it gets inside the batch — the
+          per-query masking
           (probe-set mask in the ADC kernel, per-query shortlist in
           the refine) means co-batched queries can never change a
           result, the property that makes the operator safe to use
@@ -3771,51 +3287,29 @@ def _register_ivf_pq_batch():
         Shares a15's cached index artifact (same corpus slice, same
         params — deliberately: the lifecycle claim is build once,
         serve every probe shape from the same bytes)."""
-        import os
-
-        emb = _emb(spark, sf_dir)
-        qrows = [
-            (r["vec_id"], r["embedding"])
-            for r in emb.filter(F.col("vec_id") < 5)
-            .select("vec_id", "embedding")
-            .collect()
-        ]
-        corpus = emb.filter((F.col("vec_id") >= 5) & (F.col("vec_id") < 2000))
-        exact = exact_knn_join(corpus, qrows, k=20)
+        qrows, corpus = _gate_inputs(spark, sf_dir)
         path, cents, books = ivf_pq_build_cached(
-            corpus,
-            cache_key=(os.path.realpath(sf_dir), "a15", 5, 2000),
-            k_cells=16,
-            m=8,
-            k_codes=256,
-            sample=2048,
+            corpus, cache_key=(os.path.realpath(sf_dir), "a15", 5, 2000)
         )
-        got: dict[int, set] = {}
-        for r in ivf_pq_knn_join(
-            spark, path, cents, books, corpus, qrows, k=20, nprobe=12
-        ).collect():  # bounded: nq × 20
-            got.setdefault(r["q_id"], set()).add((r["vec_id"], r["score"]))
+        got = _by_query(
+            ivf_pq_knn_join(
+                spark, path, cents, books, corpus, qrows, k=20, nprobe=12
+            ).collect(),  # bounded: nq × 20
+            scored=True,
+        )
+        q0, qv0 = qrows[0]
         solo = {
             (r["vec_id"], r["score"])
-            for r in ivf_pq_knn_join(
-                spark, path, cents, books, corpus, qrows[:1], k=20, nprobe=12
+            for r in ivf_pq_topk(
+                spark, path, cents, books, corpus, q0, qv0, k=20, nprobe=12
             ).collect()
         }
-        independent = solo == got.get(qrows[0][0], set())
-        exact_ids: dict[int, set] = {}
-        for r in exact.collect():  # bounded: nq × 20
-            exact_ids.setdefault(r["q_id"], set()).add(r["vec_id"])
-        ok_rows = []
-        for q_id, _qv in qrows:
-            if q_id not in exact_ids:
-                continue
-            want = exact_ids[q_id]
-            got_ids = {v for v, _s in got.get(q_id, set())}
-            ok_rows.append(
-                (q_id, independent and len(got_ids & want) >= 0.4 * len(want))
-            )
-        ok = spark.createDataFrame(ok_rows, "q_id long, batch_ok boolean")
-        return exact.join(ok, "q_id").select("q_id", "vec_id", "score", "batch_ok")
+        independent = solo == got.get(q0, set())
+        return _top20_gate(
+            spark, corpus, qrows, "batch_ok",
+            lambda q, want: independent
+            and _recall_ok({v for v, _s in got.get(q, set())}, want, 0.4),
+        )
 
     return a17_ivf_pq_batch_knn
 
@@ -3826,22 +3320,7 @@ _register_ivf_pq_batch()
 def _register_ivf_pq_filtered():
     @register(
         "a18_ivf_pq_filtered_knn",
-        oracle="""
-        WITH q AS (
-          SELECT vec_id AS q_id, embedding::DOUBLE[] AS qv
-          FROM embeddings WHERE vec_id < 5
-        ), corpus AS (
-          SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings
-          WHERE vec_id >= 5 AND vec_id < 2000 AND label = 0
-        )
-        SELECT q.q_id, c.vec_id,
-               ROUND(list_cosine_similarity(c.v, q.qv), 6) AS score,
-               TRUE AS filtered_ok
-        FROM q, LATERAL (
-          SELECT vec_id, v FROM corpus
-          ORDER BY list_cosine_similarity(v, q.qv) DESC, vec_id
-          LIMIT 20) c
-        """,
+        oracle=_top20_oracle("filtered_ok", scope=" AND label = 0"),
     )
     def a18_ivf_pq_filtered_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
         """Filtered ANN (r14's `eligible` pre-filter, gated r15) on
@@ -3876,50 +3355,23 @@ def _register_ivf_pq_filtered():
         params): the lifecycle claim is build ONCE on the full
         corpus, serve every scope from the same bytes — never one
         index per tenant."""
-        import os
-
-        emb = _emb(spark, sf_dir)
-        qrows = [
-            (r["vec_id"], r["embedding"])
-            for r in emb.filter(F.col("vec_id") < 5)
-            .select("vec_id", "embedding")
-            .collect()
-        ]
-        corpus = emb.filter((F.col("vec_id") >= 5) & (F.col("vec_id") < 2000))
+        qrows, corpus = _gate_inputs(spark, sf_dir)
         eligible = corpus.filter(F.col("label") == 0)
-        exact = exact_knn_join(eligible, qrows, k=20)
         path, cents, books = ivf_pq_build_cached(
-            corpus,
-            cache_key=(os.path.realpath(sf_dir), "a15", 5, 2000),
-            k_cells=16,
-            m=8,
-            k_codes=256,
-            sample=2048,
+            corpus, cache_key=(os.path.realpath(sf_dir), "a15", 5, 2000)
         )
-        got_ids: dict[int, set] = {}
-        for r in ivf_pq_knn_join(
-            spark, path, cents, books, corpus, qrows,
-            k=20, nprobe=12, eligible=eligible.select("vec_id"),
-        ).collect():  # bounded: nq × 20
-            got_ids.setdefault(r["q_id"], set()).add(r["vec_id"])
+        got = _by_query(
+            ivf_pq_knn_join(
+                spark, path, cents, books, corpus, qrows,
+                k=20, nprobe=12, eligible=eligible.select("vec_id"),
+            ).collect()  # bounded: nq × 20
+        )
         # bounded: ≈10% of the ≤1995-id corpus slice
         elig_ids = {r["vec_id"] for r in eligible.select("vec_id").collect()}
-        exact_ids: dict[int, set] = {}
-        for r in exact.collect():  # bounded: nq × 20
-            exact_ids.setdefault(r["q_id"], set()).add(r["vec_id"])
-        ok_rows = []
-        for q_id, _qv in qrows:
-            if q_id not in exact_ids:
-                continue
-            want = exact_ids[q_id]
-            got = got_ids.get(q_id, set())
-            binds = got <= elig_ids
-            ok_rows.append(
-                (q_id, binds and len(got & want) >= 0.4 * len(want))
-            )
-        ok = spark.createDataFrame(ok_rows, "q_id long, filtered_ok boolean")
-        return exact.join(ok, "q_id").select(
-            "q_id", "vec_id", "score", "filtered_ok"
+        return _top20_gate(
+            spark, eligible, qrows, "filtered_ok",
+            lambda q, want: got.get(q, set()) <= elig_ids
+            and _recall_ok(got.get(q, set()), want, 0.4),
         )
 
     return a18_ivf_pq_filtered_knn
@@ -3928,26 +3380,72 @@ def _register_ivf_pq_filtered():
 _register_ivf_pq_filtered()
 
 
-def _register_streaming_knn():
-    @register(
-        "s03_streaming_knn_equivalence",
-        oracle="""
-        WITH q AS (
-          SELECT vec_id AS q_id, embedding::DOUBLE[] AS qv
-          FROM embeddings WHERE vec_id < 5
-        ), corpus AS (
-          SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings
-          WHERE vec_id >= 5 AND vec_id < 2000
-        )
-        SELECT q.q_id, c.vec_id,
-               ROUND(list_cosine_similarity(c.v, q.qv), 6) AS score,
-               TRUE AS stream_ok
-        FROM q, LATERAL (
-          SELECT vec_id, v FROM corpus
-          ORDER BY list_cosine_similarity(v, q.qv) DESC, vec_id
-          LIMIT 20) c
-        """,
+def _two_file_stream(spark: SparkSession, src: str, rows: list):
+    """Write (vec_id, vector) ``rows`` as TWO jsonl files under ``src``
+    with strictly increasing mtimes (FileStreamSource batch order) and
+    return (a stream reading one file per trigger, files written —
+    an empty half writes none)."""
+    import json
+    import time
+
+    os.makedirs(src)
+    half = len(rows) // 2 or 1
+    now = time.time()
+    n_files = 0
+    for i, chunk in enumerate((rows[:half], rows[half:])):
+        if not chunk:
+            continue
+        n_files += 1
+        p = os.path.join(src, f"b{i}.jsonl")
+        with open(p, "w") as fh:
+            fh.write(
+                "\n".join(
+                    json.dumps({"vec_id": q, "embedding": [float(x) for x in v]})
+                    for q, v in chunk
+                )
+            )
+        os.utime(p, (now + i, now + i))
+    stream = (
+        spark.readStream.schema("vec_id long, embedding array<double>")
+        .option("maxFilesPerTrigger", 1)
+        .json(src)
     )
+    return stream, n_files
+
+
+def _await_stream(q, what: str) -> None:
+    if not q.awaitTermination(300):
+        q.stop()
+        raise TimeoutError(f"{what} did not finish in 300s")
+
+
+def _stream_probe_gate(
+    spark: SparkSession, tmp: str, qrows: list, corpus: DataFrame, batch, **probe
+) -> DataFrame:
+    """s03/s05 body: stream the query set through
+    ``streaming_knn_probe`` in two file micro-batches; ``stream_ok``
+    per query = the union of the triggers' outputs equals the batch
+    probe's rows (``batch``: q_id → (vec_id, score) set)."""
+    from parquet_pipeline_spark.streaming.events import streaming_knn_probe
+
+    stream, _n = _two_file_stream(spark, os.path.join(tmp, "src"), qrows)
+    dest = os.path.join(tmp, "res")
+    _await_stream(
+        streaming_knn_probe(
+            stream, dest=dest, checkpoint=os.path.join(tmp, "ckpt"), emb=corpus,
+            k=20, **probe,
+        ),
+        "streaming probe",
+    )
+    got = _by_query(spark.read.parquet(dest).collect(), scored=True)  # nq × 20
+    return _top20_gate(
+        spark, corpus, qrows, "stream_ok",
+        lambda q, _want: got.get(q, set()) == batch.get(q, set()),
+    )
+
+
+def _register_streaming_knn():
+    @register("s03_streaming_knn_equivalence", oracle=_top20_oracle("stream_ok"))
     def s03_streaming_knn_equivalence(spark: SparkSession, sf_dir: str) -> DataFrame:
         """Streaming retrieval ≡ batch retrieval as a HASH-GREEN
         driver row (the s02 convention applied to the vector layer):
@@ -3964,79 +3462,22 @@ def _register_streaming_knn():
         Returned rows are the exact top-20 (hash-checked against the
         oracle's replay) + the per-query ``stream_ok`` boolean;
         shares a15/a17's cached index artifact."""
-        import json as _json
-        import os as _os
-        import time as _time
-
         from parquet_pipeline_spark.scratch import scratch_dir
-        from parquet_pipeline_spark.streaming.events import streaming_knn_probe
 
-        emb = _emb(spark, sf_dir)
-        qrows = [
-            (r["vec_id"], r["embedding"])
-            for r in emb.filter(F.col("vec_id") < 5)
-            .select("vec_id", "embedding")
-            .collect()
-        ]
-        corpus = emb.filter((F.col("vec_id") >= 5) & (F.col("vec_id") < 2000))
+        qrows, corpus = _gate_inputs(spark, sf_dir)
         path, cents, books = ivf_pq_build_cached(
-            corpus,
-            cache_key=(_os.path.realpath(sf_dir), "a15", 5, 2000),
-            k_cells=16,
-            m=8,
-            k_codes=256,
-            sample=2048,
+            corpus, cache_key=(os.path.realpath(sf_dir), "a15", 5, 2000)
         )
-        want: dict[int, set] = {}
-        for r in ivf_pq_knn_join(
-            spark, path, cents, books, corpus, qrows, k=20, nprobe=8
-        ).collect():  # bounded: nq × 20
-            want.setdefault(r["q_id"], set()).add((r["vec_id"], r["score"]))
-
-        tmp = scratch_dir("s03_stream_knn_")
-        src = _os.path.join(tmp, "src")
-        _os.makedirs(src)
-        half = len(qrows) // 2 or 1
-        now = _time.time()
-        for i, chunk in enumerate((qrows[:half], qrows[half:])):
-            if not chunk:
-                continue
-            p = _os.path.join(src, f"b{i}.jsonl")
-            with open(p, "w") as fh:
-                fh.write(
-                    "\n".join(
-                        _json.dumps(
-                            {"vec_id": q, "embedding": [float(x) for x in v]}
-                        )
-                        for q, v in chunk
-                    )
-                )
-            # strictly increasing mtimes: FileStreamSource batch order
-            _os.utime(p, (now + i, now + i))
-        stream = (
-            spark.readStream.schema("vec_id long, embedding array<double>")
-            .option("maxFilesPerTrigger", 1)
-            .json(src)
+        batch = _by_query(
+            ivf_pq_knn_join(
+                spark, path, cents, books, corpus, qrows, k=20, nprobe=8
+            ).collect(),  # bounded: nq × 20
+            scored=True,
         )
-        dest = _os.path.join(tmp, "res")
-        q = streaming_knn_probe(
-            stream, path, cents, books, corpus, dest,
-            _os.path.join(tmp, "ckpt"), k=20, nprobe=8,
+        return _stream_probe_gate(
+            spark, scratch_dir("s03_stream_knn_"), qrows, corpus, batch,
+            index_path=path, centroids=cents, codebooks=books, nprobe=8,
         )
-        if not q.awaitTermination(300):
-            q.stop()
-            raise TimeoutError("s03 streaming probe did not finish in 300s")
-        got: dict[int, set] = {}
-        for r in spark.read.parquet(dest).collect():  # bounded: nq × 20
-            got.setdefault(r["q_id"], set()).add((r["vec_id"], r["score"]))
-
-        exact = exact_knn_join(corpus, qrows, k=20)
-        ok_rows = [
-            (q_id, got.get(q_id, set()) == want.get(q_id, set()))
-            for q_id, _qv in qrows
-        ]
-        ok = spark.createDataFrame(ok_rows, "q_id long, stream_ok boolean")
-        return exact.join(ok, "q_id").select("q_id", "vec_id", "score", "stream_ok")
 
     return s03_streaming_knn_equivalence
 
@@ -4045,25 +3486,7 @@ _register_streaming_knn()
 
 
 def _register_streaming_sq8():
-    @register(
-        "s05_streaming_sq8_equivalence",
-        oracle="""
-        WITH q AS (
-          SELECT vec_id AS q_id, embedding::DOUBLE[] AS qv
-          FROM embeddings WHERE vec_id < 5
-        ), corpus AS (
-          SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings
-          WHERE vec_id >= 5 AND vec_id < 2000
-        )
-        SELECT q.q_id, c.vec_id,
-               ROUND(list_cosine_similarity(c.v, q.qv), 6) AS score,
-               TRUE AS stream_ok
-        FROM q, LATERAL (
-          SELECT vec_id, v FROM corpus
-          ORDER BY list_cosine_similarity(v, q.qv) DESC, vec_id
-          LIMIT 20) c
-        """,
-    )
+    @register("s05_streaming_sq8_equivalence", oracle=_top20_oracle("stream_ok"))
     def s05_streaming_sq8_equivalence(spark: SparkSession, sf_dir: str) -> DataFrame:
         """Streaming retrieval ≡ batch retrieval on the SQ8 int8 tier
         (r16, VERDICT r15 item 2 — the s03 contract applied to the
@@ -4077,76 +3500,24 @@ def _register_streaming_sq8():
         machinery. Returned rows are the exact top-20 (hash-checked
         against the oracle's replay) + the per-query ``stream_ok``
         boolean; shares a19's cached codes artifact."""
-        import json as _json
-        import os as _os
-        import time as _time
-
         from parquet_pipeline_spark.scratch import scratch_dir
-        from parquet_pipeline_spark.streaming.events import streaming_knn_probe
 
-        emb = _emb(spark, sf_dir)
-        qrows = [
-            (r["vec_id"], r["embedding"])
-            for r in emb.filter(F.col("vec_id") < 5)
-            .select("vec_id", "embedding")
-            .collect()
-        ]
-        corpus = emb.filter((F.col("vec_id") >= 5) & (F.col("vec_id") < 2000))
+        qrows, corpus = _gate_inputs(spark, sf_dir)
         bounds, codes_path = sq8_build_cached(
-            corpus, cache_key=(_os.path.realpath(sf_dir), "sq8", 5, 2000)
+            corpus, cache_key=(os.path.realpath(sf_dir), "sq8", 5, 2000)
         )
-        codes = spark.read.parquet(codes_path)
-        want: dict[int, set] = {}
-        for r in sq8_knn_join(
-            codes, bounds, corpus, qrows, k=20, shortlist=200
-        ).collect():  # bounded: nq × 20
-            want.setdefault(r["q_id"], set()).add((r["vec_id"], r["score"]))
-
-        tmp = scratch_dir("s05_stream_sq8_")
-        src = _os.path.join(tmp, "src")
-        _os.makedirs(src)
-        half = len(qrows) // 2 or 1
-        now = _time.time()
-        for i, chunk in enumerate((qrows[:half], qrows[half:])):
-            if not chunk:
-                continue
-            p = _os.path.join(src, f"b{i}.jsonl")
-            with open(p, "w") as fh:
-                fh.write(
-                    "\n".join(
-                        _json.dumps(
-                            {"vec_id": q, "embedding": [float(x) for x in v]}
-                        )
-                        for q, v in chunk
-                    )
-                )
-            # strictly increasing mtimes: FileStreamSource batch order
-            _os.utime(p, (now + i, now + i))
-        stream = (
-            spark.readStream.schema("vec_id long, embedding array<double>")
-            .option("maxFilesPerTrigger", 1)
-            .json(src)
+        batch = _by_query(
+            sq8_knn_join(
+                spark.read.parquet(codes_path), bounds, corpus, qrows, k=20,
+                shortlist=200,
+            ).collect(),  # bounded: nq × 20
+            scored=True,
         )
-        dest = _os.path.join(tmp, "res")
-        q = streaming_knn_probe(
-            stream, codes_path, None, None, corpus, dest,
-            _os.path.join(tmp, "ckpt"), k=20, shortlist=200,
-            tier="sq8", sq8_bounds=bounds,
+        return _stream_probe_gate(
+            spark, scratch_dir("s05_stream_sq8_"), qrows, corpus, batch,
+            index_path=codes_path, centroids=None, codebooks=None,
+            shortlist=200, tier="sq8", sq8_bounds=bounds,
         )
-        if not q.awaitTermination(300):
-            q.stop()
-            raise TimeoutError("s05 streaming probe did not finish in 300s")
-        got: dict[int, set] = {}
-        for r in spark.read.parquet(dest).collect():  # bounded: nq × 20
-            got.setdefault(r["q_id"], set()).add((r["vec_id"], r["score"]))
-
-        exact = exact_knn_join(corpus, qrows, k=20)
-        ok_rows = [
-            (q_id, got.get(q_id, set()) == want.get(q_id, set()))
-            for q_id, _qv in qrows
-        ]
-        ok = spark.createDataFrame(ok_rows, "q_id long, stream_ok boolean")
-        return exact.join(ok, "q_id").select("q_id", "vec_id", "score", "stream_ok")
 
     return s05_streaming_sq8_equivalence
 
@@ -4157,28 +3528,7 @@ _register_streaming_sq8()
 def _register_streaming_append():
     @register(
         "s04_streaming_index_append_equivalence",
-        oracle="""
-        WITH q AS (
-          SELECT vec_id AS q_id, embedding::DOUBLE[] AS qv
-          FROM embeddings WHERE vec_id < 5
-        ), corpus AS (
-          SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings
-          WHERE vec_id >= 5 AND vec_id < 2000
-        ), n AS (
-          SELECT CAST(COUNT(*) AS BIGINT) AS indexed_total
-          FROM embeddings
-          WHERE vec_id >= 5 AND vec_id < 2000
-            AND embedding IS NOT NULL
-            AND list_dot_product(embedding::DOUBLE[], embedding::DOUBLE[]) > 0
-        )
-        SELECT q.q_id, c.vec_id,
-               ROUND(list_cosine_similarity(c.v, q.qv), 6) AS score,
-               TRUE AS append_ok, n.indexed_total
-        FROM q, n, LATERAL (
-          SELECT vec_id, v FROM corpus
-          ORDER BY list_cosine_similarity(v, q.qv) DESC, vec_id
-          LIMIT 20) c
-        """,
+        oracle=_top20_oracle("append_ok", indexed_total=True),
     )
     def s04_streaming_index_append_equivalence(
         spark: SparkSession, sf_dir: str
@@ -4205,10 +3555,7 @@ def _register_streaming_append():
         each call copies it twice and spends its time on what the
         row certifies: the live stream, the batch append, the
         row-for-row equality, and the probes (batched plan, r13)."""
-        import json as _json
-        import os as _os
-        import shutil as _shutil
-        import time as _time
+        import shutil
 
         from parquet_pipeline_spark.scratch import scratch_dir
         from parquet_pipeline_spark.streaming.events import (
@@ -4216,65 +3563,33 @@ def _register_streaming_append():
         )
 
         emb = _emb(spark, sf_dir)
-        qrows = [
-            (r["vec_id"], r["embedding"])
-            for r in emb.filter(F.col("vec_id") < 5)
-            .select("vec_id", "embedding")
-            .collect()
-        ]
+        qrows, full = _gate_inputs(spark, sf_dir)
         snapshot = emb.filter((F.col("vec_id") >= 5) & (F.col("vec_id") < 1500))
         batch = emb.filter((F.col("vec_id") >= 1500) & (F.col("vec_id") < 2000))
-        full = emb.filter((F.col("vec_id") >= 5) & (F.col("vec_id") < 2000))
         base_path, cents, books = ivf_pq_build_cached(
-            snapshot,
-            cache_key=(_os.path.realpath(sf_dir), "a16", 5, 1500),
-            k_cells=16,
-            m=8,
-            k_codes=256,
-            sample=2048,
+            snapshot, cache_key=(os.path.realpath(sf_dir), "a16", 5, 1500)
         )
 
         tmp = scratch_dir("s04_stream_append_")
-        stream_idx = _os.path.join(tmp, "stream_idx.parquet")
-        batch_idx = _os.path.join(tmp, "batch_idx.parquet")
-        _shutil.copytree(base_path, stream_idx)
-        _shutil.copytree(base_path, batch_idx)
+        stream_idx = os.path.join(tmp, "stream_idx.parquet")
+        batch_idx = os.path.join(tmp, "batch_idx.parquet")
+        shutil.copytree(base_path, stream_idx)
+        shutil.copytree(base_path, batch_idx)
         ivf_pq_append(spark, batch_idx, batch, cents, books)
 
         rows = sorted(
-            (r["vec_id"], [float(x) for x in r["embedding"]])
+            (r["vec_id"], r["embedding"])
             for r in batch.select("vec_id", "embedding").collect()
             if r["embedding"] is not None
         )  # bounded: 500 vectors at the id-capped slice
-        src = _os.path.join(tmp, "src")
-        _os.makedirs(src)
-        half = len(rows) // 2 or 1
-        now = _time.time()
-        n_chunks = 0  # id-capped slices can make the batch empty
-        for i, chunk in enumerate((rows[:half], rows[half:])):
-            if not chunk:
-                continue
-            n_chunks += 1
-            p = _os.path.join(src, f"b{i}.jsonl")
-            with open(p, "w") as fh:
-                fh.write(
-                    "\n".join(
-                        _json.dumps({"vec_id": v, "embedding": e})
-                        for v, e in chunk
-                    )
-                )
-            _os.utime(p, (now + i, now + i))
-        stream = (
-            spark.readStream.schema("vec_id long, embedding array<double>")
-            .option("maxFilesPerTrigger", 1)
-            .json(src)
+        # id-capped slices can make the batch empty
+        stream, n_chunks = _two_file_stream(spark, os.path.join(tmp, "src"), rows)
+        _await_stream(
+            streaming_ivf_pq_append(
+                stream, stream_idx, cents, books, os.path.join(tmp, "ckpt")
+            ),
+            "s04 streaming append",
         )
-        q = streaming_ivf_pq_append(
-            stream, stream_idx, cents, books, _os.path.join(tmp, "ckpt")
-        )
-        if not q.awaitTermination(300):
-            q.stop()
-            raise TimeoutError("s04 streaming append did not finish in 300s")
 
         s_df = spark.read.parquet(stream_idx)
         b_df = spark.read.parquet(batch_idx).select(*s_df.columns)
@@ -4288,37 +3603,19 @@ def _register_streaming_append():
         meta_ok = read_ivfpq_meta(stream_idx)["appends"] == n_chunks
         indexed_total = s_df.count()
 
-        exact = exact_knn_join(full, qrows, k=20)
-        exact_ids: dict[int, set] = {}
-        for r in exact.collect():  # bounded: 5 × 20
-            exact_ids.setdefault(r["q_id"], set()).add(r["vec_id"])
         # batched probe of the STREAMED index (appends>0 there, so
         # this also runs the replay-dedup shortlist path in-gate)
-        got_ids: dict[int, set] = {}
-        for r in ivf_pq_knn_join(
-            spark, stream_idx, cents, books, full, qrows, k=20, nprobe=12
-        ).collect():  # bounded: 5 × 20
-            got_ids.setdefault(r["q_id"], set()).add(r["vec_id"])
-        ok_rows = []
-        for q_id, _qv in qrows:
-            if q_id not in exact_ids:
-                continue
-            got = got_ids.get(q_id, set())
-            want = exact_ids[q_id]
-            ok_rows.append(
-                (
-                    q_id,
-                    same_index
-                    and meta_ok
-                    and len(got & want) >= 0.4 * len(want),
-                )
-            )
-        ok = spark.createDataFrame(ok_rows, "q_id long, append_ok boolean")
-        return (
-            exact.join(ok, "q_id")
-            .withColumn("indexed_total", F.lit(int(indexed_total)).cast("bigint"))
-            .select("q_id", "vec_id", "score", "append_ok", "indexed_total")
+        got = _by_query(
+            ivf_pq_knn_join(
+                spark, stream_idx, cents, books, full, qrows, k=20, nprobe=12
+            ).collect()  # bounded: 5 × 20
         )
+        return _top20_gate(
+            spark, full, qrows, "append_ok",
+            lambda q, want: same_index
+            and meta_ok
+            and _recall_ok(got.get(q, set()), want, 0.4),
+        ).withColumn("indexed_total", F.lit(int(indexed_total)).cast("bigint"))
 
     return s04_streaming_index_append_equivalence
 

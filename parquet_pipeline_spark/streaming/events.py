@@ -782,7 +782,7 @@ def streaming_ivf_pq_append(
     rows. Duplicate ids waste index bytes and shortlist depth but
     cannot corrupt probe results: every probe path dedups ids before
     ranking (``pq_topk`` groupBy-max, ``ivf_pq_knn_join``'s
-    (q_id, id) dropDuplicates before its shortlist window), pinned
+    (q_id, id) groupBy-max before its shortlist window), pinned
     by the crash-replay tests in tests/test_vectors.py. The next
     ``ivf_pq_compact`` rewrite reclaims the bytes — it drops exact
     duplicate rows during its shuffle. Compact when

@@ -31,3 +31,13 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir() -> str:
     return SF_DIR
+
+
+@pytest.fixture(scope="session")
+def emb_001(spark):
+    """(vec_id, embedding) of the sf0.01 fixture: enough vectors for
+    retrieval tests whose shortlist cut must be real."""
+    sf001 = os.path.join(os.path.dirname(SF_DIR), "sf0.01")
+    return spark.read.parquet(f"{sf001}/embeddings.parquet").select(
+        "vec_id", "embedding"
+    )

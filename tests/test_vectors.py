@@ -424,6 +424,56 @@ def test_knn_joins_empty_query_batch(spark, sf_dir, tmp_path):
     assert out.count() == 0 and out.columns == ["q_id", "vec_id", "score"]
 
 
+def test_knn_kernels_unpickle_without_the_package(spark, emb_001, tmp_path, monkeypatch):
+    """A driver that finds the package only through its own sys.path
+    (cwd elsewhere) has Python workers that cannot import it, so every
+    function the batched joins hand to mapInPandas must unpickle in a
+    bare interpreter: closures ship by value, module-level functions
+    by reference."""
+    import os
+    import subprocess
+    import sys
+
+    from pyspark import cloudpickle
+    from pyspark.sql import functions as F
+
+    from parquet_pipeline_spark.operators import vectors as V
+
+    emb = emb_001
+    shipped = []
+    real = type(emb).mapInPandas
+
+    def spy(self, fn, schema, *a, **kw):
+        shipped.append(fn)
+        return real(self, fn, schema, *a, **kw)
+
+    monkeypatch.setattr(type(emb), "mapInPandas", spy)
+    corpus = emb.filter((F.col("vec_id") >= 5) & (F.col("vec_id") < 200))
+    qrows = [(r["vec_id"], r["embedding"]) for r in emb.filter("vec_id < 2").collect()]
+    books = V.pq_train(corpus, m=8, k_codes=16, sample=128)
+    bounds = V.sq8_train(corpus)
+    shipped.clear()  # the model builds above are not under test
+    V.exact_knn_join(corpus, qrows, k=3)
+    V.pq_knn_join(V.pq_encode(corpus, books), books, corpus, qrows, k=3)
+    V.sq8_knn_join(V.sq8_encode(corpus, bounds), bounds, corpus, qrows, k=3)
+    blobs = [cloudpickle.dumps(fn) for fn in shipped if fn.__module__ == V.__name__]
+    assert len(blobs) >= 5  # exact; pq ADC + refine; sq8 scorer + exact refine
+    path = tmp_path / "kernels.pkl"
+    path.write_bytes(cloudpickle.dumps(blobs))
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    code = (
+        "import importlib.util, pickle\n"
+        "assert importlib.util.find_spec('parquet_pipeline_spark') is None\n"
+        f"for b in pickle.loads(open({str(path)!r}, 'rb').read()):\n"
+        "    pickle.loads(b)\n"
+    )
+    res = subprocess.run(
+        [sys.executable, "-c", code], cwd=tmp_path, env=env,
+        capture_output=True, text=True, timeout=120,
+    )
+    assert res.returncode == 0, res.stderr[-2000:]
+
+
 # ---------------------------------------------------------------------------
 # v08 (r8): quantized MMR — the oracle-portable integer-unit path
 # ---------------------------------------------------------------------------
@@ -629,6 +679,60 @@ def test_pq_knn_join_matches_solo_path(spark):
     }
     assert dup == clean
     codes.unpersist()
+
+
+def test_ivf_pq_topk_matches_batched_path(spark, emb_001, tmp_path):
+    """ivf_pq_topk (one query) must return PER QUERY exactly what
+    ivf_pq_knn_join returns for the same query inside a co-batched
+    set — same probed cells, same shortlist cut, same refine, same
+    tie-breaks — on a fresh index AND on a replay-littered one (the
+    same batch appended twice, so the dedup window is open). The
+    shortlist is far below the probed rows, so the ADC cut is real."""
+    from pyspark.sql import functions as F
+
+    from parquet_pipeline_spark.operators.vectors import (
+        ivf_centroids,
+        ivf_pq_append,
+        ivf_pq_index,
+        ivf_pq_knn_join,
+        ivf_pq_topk,
+        pq_train,
+    )
+
+    emb = emb_001
+    snap = emb.filter((F.col("vec_id") >= 5) & (F.col("vec_id") < 600))
+    batch = emb.filter((F.col("vec_id") >= 600) & (F.col("vec_id") < 800))
+    full = emb.filter((F.col("vec_id") >= 5) & (F.col("vec_id") < 800))
+    cents = ivf_centroids(snap, k=8)
+    books = pq_train(snap, m=8, k_codes=16, sample=256)
+    fresh = str(tmp_path / "fresh.parquet")
+    ivf_pq_index(full, cents, books, fresh)
+    replay = str(tmp_path / "replay.parquet")
+    ivf_pq_index(snap, cents, books, replay)
+    for _ in range(2):  # a crash-replayed append lands the batch twice
+        ivf_pq_append(spark, replay, batch, cents, books)
+
+    qrows = [
+        (r["vec_id"], r["embedding"])
+        for r in emb.filter(F.col("vec_id") < 5).collect()
+    ]
+    probe = dict(k=10, nprobe=4, shortlist=30)
+    for path in (fresh, replay):
+        batched: dict[int, list] = {}
+        for r in ivf_pq_knn_join(
+            spark, path, cents, books, full, qrows, **probe
+        ).collect():
+            batched.setdefault(r["q_id"], []).append((r["vec_id"], r["score"]))
+        assert set(batched) == {q for q, _ in qrows}
+        for q_id, qv in qrows:
+            solo = sorted(
+                (r["vec_id"], r["score"])
+                for r in ivf_pq_topk(
+                    spark, path, cents, books, full, q_id, qv, **probe
+                ).collect()
+            )
+            assert len(solo) == 10
+            assert sorted(batched[q_id]) == solo, (path, q_id)
 
 
 def test_ivf_pq_index_prunes_partitions(spark, tmp_path):
@@ -1600,8 +1704,8 @@ def test_ivf_pq_knn_join_boundary_crowding_duplicates(spark, tmp_path):
 def test_batched_probe_warns_on_zero_norm_queries(spark, tmp_path, caplog):
     """VERDICT r14 nit: zero-norm query vectors are dropped by
     contract (cosine undefined), but silently — an all-zero batch
-    returned an empty frame with no trace. Both batched probes now
-    log ONE warning naming the dropped q_ids."""
+    returned an empty frame with no trace. Every batched probe now
+    logs ONE warning naming the dropped q_ids."""
     import logging
 
     from pyspark.sql import functions as F
@@ -1637,6 +1741,58 @@ def test_batched_probe_warns_on_zero_norm_queries(spark, tmp_path, caplog):
     assert out == []
     warn = [r for r in caplog.records if "zero-norm" in r.getMessage()]
     assert len(warn) == 1 and "ivf_pq_knn_join" in warn[0].getMessage()
+
+    # the exact and IVF-exact joins share the same query prep
+    ivf_path = str(tmp_path / "ivf.parquet")
+    V.write_ivf_index(corpus, cents, ivf_path)
+    for op, probe in (
+        ("exact_knn_join", lambda q: V.exact_knn_join(corpus, q, k=3)),
+        ("ivf_knn_join", lambda q: V.ivf_knn_join(spark, ivf_path, cents, q, k=3)),
+    ):
+        caplog.clear()
+        with caplog.at_level(logging.WARNING, logger="parquet_pipeline_spark.operators.vectors"):
+            out = probe(qrows).collect()
+        assert {r["q_id"] for r in out} == {0}, op
+        warn = [r for r in caplog.records if "zero-norm" in r.getMessage()]
+        assert len(warn) == 1 and op in warn[0].getMessage(), op
+        assert "[7, 9]" in warn[0].getMessage()
+
+
+def test_unreadable_appends_counter_keeps_dedup_on(spark, emb_001, tmp_path):
+    """A sidecar whose ``appends`` is null or not a finite number cannot
+    certify a duplicate-free index: ``_index_may_hold_duplicates``
+    answers True (default-safe) instead of raising, and the probe
+    still serves."""
+    import json
+    import os
+
+    from pyspark.sql import functions as F
+
+    from parquet_pipeline_spark.operators import vectors as V
+
+    emb = emb_001
+    corpus = emb.filter((F.col("vec_id") >= 5) & (F.col("vec_id") < 300))
+    cents = V.ivf_centroids(corpus, k=4)
+    books = V.pq_train(corpus, m=8, k_codes=16, sample=128)
+    path = str(tmp_path / "idx.parquet")
+    V.ivf_pq_index(corpus, cents, books, path)
+    assert V._index_may_hold_duplicates(path) is False
+    qrows = [
+        (r["vec_id"], r["embedding"])
+        for r in emb.filter(F.col("vec_id") < 3).collect()
+    ]
+    meta_path = os.path.join(path, "_ivfpq_meta.json")
+    with open(meta_path) as fh:
+        meta = json.load(fh)
+    for bad in (None, "many", float("inf")):
+        meta["appends"] = bad
+        with open(meta_path, "w") as fh:
+            json.dump(meta, fh)
+        assert V._index_may_hold_duplicates(path) is True
+        out = V.ivf_pq_knn_join(
+            spark, path, cents, books, corpus, qrows, k=5, nprobe=4
+        ).collect()
+        assert len(out) == 5 * len(qrows)
 
 
 def test_ivf_pq_stats_recovers_from_crashed_swap(spark, tmp_path):
@@ -1913,7 +2069,7 @@ def test_sq8_knn_join_matches_solo_and_drops_dirty(spark):
         tuple(r)
         for r in sq8_knn_join(dirty, bounds, corpus, qrows, k=10).collect()
     )
-    assert got == batched
+    assert got == batched and len(got) == 30
     assert not any(t[1] >= 900001 for t in got)
 
 
@@ -1976,52 +2132,6 @@ def test_ivf_centroids_replicated_ids_dedup(spark):
     # vectors are pairwise distinct (no duplicate centroid seeds)
     seen = {tuple(v) for _c, v in cents}
     assert len(seen) == k
-
-
-def test_sq8_kernel_and_codegen_backends_identical(spark):
-    """r15 ladder finding: the all-JVM codegen scoring is an HOF trap
-    at scale (interpreted lambda per array element), so the default
-    backend is an Arrow kernel (one matmul per batch). Both backends
-    must return byte-identical results — on clean codes AND on a
-    dirty-littered table."""
-    from pyspark.sql import functions as F
-
-    from parquet_pipeline_spark.operators.vectors import (
-        sq8_encode,
-        sq8_knn_join,
-        sq8_train,
-    )
-
-    emb = spark.read.parquet("/root/testdata/sf0.01/embeddings.parquet").select(
-        "vec_id", "embedding"
-    )
-    corpus = emb.filter((F.col("vec_id") >= 5) & (F.col("vec_id") < 400))
-    qrows = [
-        (r["vec_id"], [float(x) for x in r["embedding"]])
-        for r in emb.filter(F.col("vec_id") < 3).collect()
-    ]
-    bounds = sq8_train(corpus)
-    codes = sq8_encode(corpus, bounds)
-    dirty = codes.unionByName(
-        spark.createDataFrame(
-            [(900001, None, 1.0), (900002, [1] * 10, 1.0), (900003, [1] * 64, 0.0)],
-            "vec_id long, codes array<smallint>, norm_r double",
-        )
-    )
-    for table in (codes, dirty):
-        kernel = sorted(
-            tuple(r)
-            for r in sq8_knn_join(
-                table, bounds, corpus, qrows, k=10, shortlist=50
-            ).collect()
-        )
-        cg = sorted(
-            tuple(r)
-            for r in sq8_knn_join(
-                table, bounds, corpus, qrows, k=10, shortlist=50, codegen=True
-            ).collect()
-        )
-        assert kernel == cg and len(kernel) == 30
 
 
 def test_sq8_train_survives_dirty_dimension_rows(spark):
